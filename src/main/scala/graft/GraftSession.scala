@@ -56,8 +56,22 @@ object GraftSession {
     // the marker. Fewer fs metadata ops per write at any scale; on
     // object stores this is the standard recommendation for exactly
     // this reason.
+    // INVARIANT that makes v2 safe: v2 is not atomic per job — a task
+    // attempt's output is visible in the destination as soon as the
+    // task commits, and racing attempts (retries, speculation —
+    // MAPREDUCE-7282) can leave duplicate or partial files there. Every
+    // write into a snapshot table therefore lands in a private staging
+    // directory (data and CDC: `Snapshots.writeStaged`/`writeCdc`,
+    // promoted by atomic move) or in a fresh uniquely named directory
+    // only a commit references (deletion-vector sidecars), and the log
+    // records the exact file set — readers never adopt a directory's
+    // contents. Speculation stays off so no second attempt races a
+    // first one inside a staging directory either. A new write path
+    // that targets a live directory directly must not ride this
+    // committer.
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    .config("spark.speculation", "false")
 
   /** Local session for tests / ad-hoc mains. */
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32),

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * Spark-first: the parse is `spark.read.csv` with quote handling —
   * schema-at-the-edge, typed table inside. The two-pass
   * count-then-send of the reference collapses into one distributed
-  * pass; conservation comes from the write-side commit, not a latch. */
+  * pass; conservation comes from the write-side commit, not a latch:
+  * the rows land as one snapshot commit, and the watermark follows it. */
 object AmazonIngest {
 
   def parse(spark: SparkSession, file: String): DataFrame =
@@ -48,9 +49,9 @@ object AmazonIngest {
     val positioned = ok.withColumn("ba",
       row_number().over(Window.orderBy(col("polarity"), col("title"), col("text")))
         .cast("long") + lit(base))
-    positioned.withColumn("topic", lit(prefix))
-      .write.mode("append").option("compression", codec)
-      .partitionBy("topic").parquet(Topics.tableDir(root, prefix))
+    val added = Snapshots.writeStaged(root, prefix, positioned.withColumn("topic", lit(prefix)),
+      Seq("topic"), writerOptions = Map("compression" -> codec))
+    Snapshots.commitFiles(root, prefix, added, Some(base + good))
     ProduceJob.commitManifest(root, prefix, base + good)
     Report(total, total - good)
   }

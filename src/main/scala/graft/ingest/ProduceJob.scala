@@ -23,9 +23,11 @@ import org.apache.spark.sql.streaming.Trigger
   *    round-robin spreading (pmod on cnt = the shuffle of the
   *    producer list).
   *
-  * After each successful write the job commits a manifest recording
-  * the highest offloaded position (max `ba`) — the "offload
-  * watermark" the consume side gates on (A7).
+  * After each successful write the job commits the snapshot, THEN a
+  * manifest recording the highest offloaded position (max `ba`) — the
+  * "offload watermark" the consume side gates on (A7). In that order
+  * the watermark never runs ahead of the log: every position under it
+  * is in a committed file, which is all the consume reads.
   */
 object ProduceJob {
 
@@ -58,8 +60,8 @@ object ProduceJob {
     // (at 1M files the sweep walk dominated every batch produce)
     val added = Snapshots.writeStaged(root, prefix, rows, Seq("topic"),
       writerOptions = Map("compression" -> codec))
-    commitManifest(root, prefix, numMessages - 1)
     Snapshots.commitFiles(root, prefix, added, Some(numMessages - 1))
+    commitManifest(root, prefix, numMessages - 1)
     Report(numMessages, 0L, numMessages - 1)
   }
 
@@ -91,8 +93,8 @@ object ProduceJob {
       case r if r.isNullAt(0) => -1L
       case r => r.getLong(0)
     }
-    commitManifest(root, prefix, maxPos)
     Snapshots.commit(root, prefix, maxPos)
+    commitManifest(root, prefix, maxPos)
     Report(produced.count(), 0L, maxPos)
   }
 
@@ -113,8 +115,8 @@ object ProduceJob {
       lit(prefix).as("topic"))
     val added = Snapshots.writeStaged(root, prefix, rows, Seq("topic"),
       writerOptions = Map("maxRecordsPerFile" -> flushEvery.toString))
-    commitManifest(root, prefix, numMessages - 1)
     Snapshots.commitFiles(root, prefix, added, Some(numMessages - 1))
+    commitManifest(root, prefix, numMessages - 1)
     Report(numMessages, 0L, numMessages - 1)
   }
 

@@ -6,11 +6,14 @@ import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFileShim
 import org.apache.spark.sql.functions.{col, input_file_name}
 
 /** Versioned snapshot log for topic tables — the minimal transactional
@@ -73,6 +76,25 @@ object Snapshots {
   private def readLogFile(p: Path): String = {
     logOpens.incrementAndGet()
     Files.readString(p)
+  }
+
+  /** Count of parquet FOOTER reads through [[readFooter]] — the footer
+    * spec pins "an append of k new files reads k footers" with this, so
+    * re-deriving stats the log already carries is unrepresentable. */
+  private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** One Hadoop configuration and one set of parquet read options for
+    * every footer read: building either per file costs 12–27 ms (the
+    * configuration re-parses its default resources), the footer read
+    * itself well under 1 ms. Both are read-only after construction. */
+  private lazy val footerConf = new Configuration()
+  private lazy val footerOptions = HadoopReadOptions.builder(footerConf).build()
+
+  /** The parquet footer of one data file (no data pages read). */
+  private[graft] def readFooter(file: HadoopPath): ParquetMetadata = {
+    footerReads.incrementAndGet()
+    val rd = new ParquetFileReader(HadoopInputFile.fromPath(file, footerConf), footerOptions)
+    try rd.getFooter finally rd.close()
   }
 
   /** Label the Spark jobs of an engine-internal action (guide §1.5 —
@@ -193,83 +215,75 @@ object Snapshots {
   private def statSafeColumn(name: String): Boolean =
     name.forall(c => c != '|' && c != '"' && c != '\\' && c != ']' && c >= ' ')
 
-  /** Footer scan of one data file: min/max for every top-level INT64,
-    * DOUBLE, and STRING column with complete chunk statistics.
+  /** Footer scan of one data file, through the shared [[readFooter]]:
+    * the exact row count ("R", also for a file with no row group),
+    * min/max for every top-level INT64, DOUBLE and STRING column with
+    * complete chunk statistics, and each column's nullness ("N").
     * Plain-JVM IO (no Spark job) — one footer read per newly committed
-    * file, never per row. */
+    * file, never per row; [[assembleStats]] carries the result in the
+    * log, so no later commit reads this footer again. */
   private def footerStats(base: Path, rel: String): Seq[FileStat] =
     try {
-      val in = HadoopInputFile.fromPath(
-        new HadoopPath(base.resolve(rel).toUri), new Configuration())
-      val rd = ParquetFileReader.open(in)
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala.toSeq
-        if (blocks.isEmpty) Seq.empty
-        else {
-        // exact per-file row count ("R"), the stat that makes a global
-        // COUNT(*) a manifest read (metadataRowCount) — at 100 TB the
-        // difference between a driver-side sum and a full table scan
-        val rows = blocks.map(_.getRowCount).sum
-        val rowStat = FileStat(rel, "_rows", rows, rows, "R")
-        val ranged = blocks.head.getColumns.asScala
-          .filter(c => c.getPath.size == 1 &&
-            statSafeColumn(c.getPath.toDotString)).toSeq
-          .flatMap { c =>
-            val name = c.getPath.toDotString
-            val ptype = c.getPrimitiveType
-            val sts = blocks.flatMap(_.getColumns.asScala
-              .filter(_.getPath.toDotString == name)).map(_.getStatistics)
-            if (sts.isEmpty || sts.exists(s => s == null || s.isEmpty || !s.hasNonNullValue)) None
-            else ptype.getPrimitiveTypeName match {
-              case PrimitiveTypeName.INT64 =>
-                Some(FileStat(rel, name,
-                  sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-                  sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max, "L"))
-              case PrimitiveTypeName.DOUBLE =>
-                val mins = sts.map(_.genericGetMin.asInstanceOf[java.lang.Double].doubleValue)
-                val maxs = sts.map(_.genericGetMax.asInstanceOf[java.lang.Double].doubleValue)
-                // NaN bounds are meaningless under the parquet spec —
-                // better no stat than a wrong skip
-                if ((mins ++ maxs).exists(_.isNaN)) None
-                else Some(FileStat(rel, name,
-                  mins.map(SortKeys.doubleKey).min, maxs.map(SortKeys.doubleKey).max, "D"))
-              case PrimitiveTypeName.BINARY
-                if ptype.getLogicalTypeAnnotation != null &&
-                  ptype.getLogicalTypeAnnotation.isInstanceOf[
-                    org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-                // writer-truncated binary stats stay valid bounds
-                // (truncated min is a prefix ≤ min; truncated max is
-                // incremented to remain ≥ max), and an 8-byte prefix
-                // key of a bound is a bound in key space
-                Some(FileStat(rel, name,
-                  sts.map(s => SortKeys.bytesKey(
-                    s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)).min,
-                  sts.map(s => SortKeys.bytesKey(
-                    s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)).max, "S"))
-              case _ => None
-            }
-          }
-        val nullness = blocks.head.getColumns.asScala
-          .filter(c => c.getPath.size == 1 &&
-            statSafeColumn(c.getPath.toDotString)).toSeq
-          .flatMap { c =>
-            val name = c.getPath.toDotString
-            val chunks = blocks.flatMap(_.getColumns.asScala
-              .filter(_.getPath.toDotString == name))
-            val sts = chunks.map(_.getStatistics)
-            if (sts.exists(s => s == null || !s.isNumNullsSet)) None
-            else {
-              val nulls = sts.map(_.getNumNulls).sum
-              val values = chunks.map(_.getValueCount).sum
-              if (values == 0) None
-              else Some(FileStat(rel, name,
-                if (nulls == values) 1L else 0L,
-                if (nulls > 0) 1L else 0L, "N"))
-            }
-          }
-        rowStat +: (ranged ++ nullness)
+      val blocks = readFooter(new HadoopPath(base.resolve(rel).toUri)).getBlocks.asScala.toSeq
+      // exact per-file row count ("R"), the stat that makes a global
+      // COUNT(*) a manifest read (metadataRowCount) — at 100 TB the
+      // difference between a driver-side sum and a full table scan
+      val rows = blocks.map(_.getRowCount).sum
+      val rowStat = FileStat(rel, "_rows", rows, rows, "R")
+      // a file with no row group carries its (zero) row count only
+      val columns = blocks.headOption.toSeq.flatMap(_.getColumns.asScala)
+        .filter(c => c.getPath.size == 1 && statSafeColumn(c.getPath.toDotString))
+      val ranged = columns.flatMap { c =>
+        val name = c.getPath.toDotString
+        val ptype = c.getPrimitiveType
+        val sts = blocks.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == name)).map(_.getStatistics)
+        if (sts.isEmpty || sts.exists(s => s == null || s.isEmpty || !s.hasNonNullValue)) None
+        else ptype.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 =>
+            Some(FileStat(rel, name,
+              sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
+              sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max, "L"))
+          case PrimitiveTypeName.DOUBLE =>
+            val mins = sts.map(_.genericGetMin.asInstanceOf[java.lang.Double].doubleValue)
+            val maxs = sts.map(_.genericGetMax.asInstanceOf[java.lang.Double].doubleValue)
+            // NaN bounds are meaningless under the parquet spec —
+            // better no stat than a wrong skip
+            if ((mins ++ maxs).exists(_.isNaN)) None
+            else Some(FileStat(rel, name,
+              mins.map(SortKeys.doubleKey).min, maxs.map(SortKeys.doubleKey).max, "D"))
+          case PrimitiveTypeName.BINARY
+            if ptype.getLogicalTypeAnnotation != null &&
+              ptype.getLogicalTypeAnnotation.isInstanceOf[
+                org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+            // writer-truncated binary stats stay valid bounds
+            // (truncated min is a prefix ≤ min; truncated max is
+            // incremented to remain ≥ max), and an 8-byte prefix
+            // key of a bound is a bound in key space
+            Some(FileStat(rel, name,
+              sts.map(s => SortKeys.bytesKey(
+                s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)).min,
+              sts.map(s => SortKeys.bytesKey(
+                s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)).max, "S"))
+          case _ => None
         }
-      } finally rd.close()
+      }
+      val nullness = columns.flatMap { c =>
+        val name = c.getPath.toDotString
+        val chunks = blocks.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == name))
+        val sts = chunks.map(_.getStatistics)
+        if (sts.exists(s => s == null || !s.isNumNullsSet)) None
+        else {
+          val nulls = sts.map(_.getNumNulls).sum
+          val values = chunks.map(_.getValueCount).sum
+          if (values == 0) None
+          else Some(FileStat(rel, name,
+            if (nulls == values) 1L else 0L,
+            if (nulls > 0) 1L else 0L, "N"))
+        }
+      }
+      rowStat +: (ranged ++ nullness)
     } catch { case _: Throwable => Seq.empty } // stats are an optimization, never fatal
 
   /** Stats for a snapshot's file set: carry what a prior snapshot
@@ -1433,13 +1447,9 @@ object Snapshots {
   }
 
   /** Top-level column names in one data file's parquet footer. */
-  private def physicalColumns(base: Path, rel: String): Seq[String] = {
-    val in = HadoopInputFile.fromPath(
-      new HadoopPath(base.resolve(rel).toUri), new Configuration())
-    val rd = ParquetFileReader.open(in)
-    try rd.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
-    finally rd.close()
-  }
+  private def physicalColumns(base: Path, rel: String): Seq[String] =
+    readFooter(new HadoopPath(base.resolve(rel).toUri))
+      .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
 
   /** The table's resolved logical column names at the latest version:
     * one file's physical schema with every schema event folded on top
@@ -1476,9 +1486,7 @@ object Snapshots {
     val base = dataDir(root, prefix)
     val withMeta = dv.nonEmpty || keepPositions
     def plain(fs: Seq[String]): DataFrame = {
-      val scan = spark.read
-        .option("basePath", base.toString)
-        .parquet(fs.map(f => base.resolve(f).toString): _*)
+      val scan = scanFiles(spark, base, fs)
       if (!withMeta) scan
       else {
         // scheme-normalized file path + in-file row position: the
@@ -1493,9 +1501,15 @@ object Snapshots {
         else {
           // anti-join against the sidecars: deleted (file, pos) pairs
           // vanish. DVs are metadata-scale next to the table, so the
-          // join broadcasts — the scan itself never shuffles.
-          val dvRows = spark.read
-            .parquet(dv.map(d => dvDir(root, prefix).resolve(d).toString): _*)
+          // join broadcasts — the scan itself never shuffles. The log
+          // names each sidecar's directory, which holds the part
+          // file(s) of one small write: listed here on the driver.
+          val dvBase = dvDir(root, prefix)
+          val dvFiles = dv.flatMap(d => Using.resource(Files.list(dvBase.resolve(d)))(
+            _.iterator().asScala.map(_.getFileName.toString)
+              .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+              .map(n => s"$d/$n").toSeq))
+          val dvRows = scanFiles(spark, dvBase, dvFiles)
             .select(org.apache.spark.sql.functions.concat(
               org.apache.spark.sql.functions.lit(base.toString + "/"),
               col("file")).as(DvPathCol),
@@ -1534,6 +1548,15 @@ object Snapshots {
       strip(frames.reduce(_.unionByName(_)))
     }
   }
+
+  /** `spark.read.option("basePath", base).parquet(files)` planned from
+    * the log instead of from storage: `files` (relative to `base`) are
+    * exactly what a snapshot pins, so the scan needs one stat per file
+    * and the first file's footer — no listing job, no schema-inference
+    * job ([[GraftFileShim]]). */
+  private def scanFiles(spark: SparkSession, base: Path, files: Seq[String]): DataFrame =
+    GraftFileShim.parquetFiles(spark, new HadoopPath(base.toString),
+      files.map(f => new HadoopPath(base.resolve(f).toString)), readFooter)
 
   /** Column names the DV-keyed read path attaches to carry each row's
     * (file, position) identity; never visible to callers unless they
@@ -1631,9 +1654,8 @@ object Snapshots {
     * decline). Files written AFTER the event carry the current
     * physical layout, so their stats stay live — the invalidation is
     * file-precise, not column-wide. */
-  private def statStaleFiles(root: String, prefix: String, column: String,
-                             upTo: Option[Int]): Set[String] =
-    schemaEvents(root, prefix, upTo).collect {
+  private def statStaleFiles(events: Seq[SchemaEvent], column: String): Set[String] =
+    events.collect {
       case a: AddedColumn if a.name == column => a.preFiles
       case r: RenamedColumn if r.from == column || r.to == column => r.preFiles
       case d: DroppedColumn if d.name == column => d.preFiles
@@ -1661,7 +1683,7 @@ object Snapshots {
     else {
       val st = snap.stats.filter(s => s.typ == "L" && s.column == column)
         .map(s => s.file -> s).toMap
-      val stale = statStaleFiles(root, prefix, column, Some(snap.version))
+      val stale = statStaleFiles(schemaEvents(root, prefix, Some(snap.version)), column)
       if (snap.files.forall(f => st.contains(f) && !stale.contains(f)))
         Some((snap.files.map(st(_).min).min, snap.files.map(st(_).max).max))
       else None
@@ -1725,6 +1747,14 @@ object Snapshots {
                       version: Option[Int] = None): Seq[String] = {
     val snap = snapshot(root, prefix, version).getOrElse(
       sys.error(s"no snapshot for $prefix"))
+    pruneFilesMulti(snap, schemaEvents(root, prefix, Some(snap.version)), ranges)
+  }
+
+  /** [[pruneFilesMulti]] against an already-resolved snapshot and its
+    * schema events (`schemaEvents` up to `snap.version`) — callers that
+    * also read the surviving files resolve the log once. */
+  def pruneFilesMulti(snap: Snapshot, events: Seq[SchemaEvent],
+                      ranges: Seq[StatRange]): Seq[String] = {
     val byCol = ranges.map(r =>
       r -> snap.stats.filter(s => s.column == r.column && s.typ == r.typ)
         .map(s => s.file -> s).toMap).toMap
@@ -1732,7 +1762,7 @@ object Snapshots {
     // describe a previous logical column — treat as absent (keep the
     // file; stats narrow IO, never semantics)
     val stale = ranges.map(_.column).distinct
-      .map(c => c -> statStaleFiles(root, prefix, c, Some(snap.version))).toMap
+      .map(c => c -> statStaleFiles(events, c)).toMap
     snap.files.filter(f => ranges.forall(r =>
       stale(r.column).contains(f) ||
         byCol(r).get(f).forall(s => s.max >= r.loKey && s.min <= r.hiKey)))
@@ -1864,6 +1894,13 @@ object Snapshots {
       schemaEvents(root, prefix, snap.map(_.version)),
       snap.map(_.dv).getOrElse(Seq.empty))
   }
+
+  /** [[readFileSubset]] of an already-resolved snapshot and its schema
+    * events (see [[pruneFilesMulti(snap*]]). */
+  private[graft] def readFileSubset(spark: SparkSession, root: String, prefix: String,
+                                    snap: Snapshot, events: Seq[SchemaEvent],
+                                    files: Seq[String]): DataFrame =
+    readFilesFilled(spark, root, prefix, files, events, snap.dv)
 
   /** Read the table as of a version (default latest): exactly the
     * committed file set, regardless of files appended since. Columns
@@ -2294,8 +2331,7 @@ object Snapshots {
       val matchedFiles: Seq[String] =
         if (candidates.isEmpty) Seq.empty
         else {
-          val withFile = spark.read.option("basePath", base.toString)
-            .parquet(candidates.map(f => base.resolve(f).toString): _*)
+          val withFile = scanFiles(spark, base, candidates)
             .withColumn("_graft_file", input_file_name())
           labeled(spark, "merge attribution")(
             distinctCollected(withFile.join(srcKeys, keys, "left_semi"), "_graft_file"))

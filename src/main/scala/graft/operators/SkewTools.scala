@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for joins whose key distribution is too hot for
@@ -31,14 +33,32 @@ object SkewTools {
     * already at least half as parallel as the session — at scale the
     * scan is parallel and the extra exchange would be pure cost; on a
     * small input the shuffled rows are exactly the frame, cheap next
-    * to the compute it unlocks. */
+    * to the compute it unlocks.
+    *
+    * The partition-count probe runs only on exchange-free plans: under
+    * AQE, `toRdd` of a plan with a shuffle or broadcast materializes
+    * every upstream stage eagerly, and the repartitioned frame would
+    * then execute them again. A frame with an exchange is returned
+    * unchanged — its rows already come out of a shuffle-wide stage. */
   def spreadForCompute(df: DataFrame): DataFrame = {
+    if (hasExchange(df)) return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     val cur =
       try df.queryExecution.toRdd.getNumPartitions
       catch { case _: Throwable => return df }
     if (cur * 2 < want) df.repartition(want) else df
   }
+
+  /** Whether executing `df` needs an exchange: the physical plan
+    * before exchange insertion either carries one already (an explicit
+    * repartition) or has an operator whose required child distribution
+    * a plain scan cannot satisfy (aggregates, joins, windows, global
+    * sorts). Planning only — no Spark job runs. */
+  private def hasExchange(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.exists {
+      case _: Exchange => true
+      case p => p.requiredChildDistribution.exists(_ != UnspecifiedDistribution)
+    }
 
   /** Inner equi join of `large ⋈ small` on `largeKey == smallKey`,
     * salted `salts` ways. Column sets must be disjoint.

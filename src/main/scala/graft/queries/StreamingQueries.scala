@@ -154,27 +154,22 @@ object StreamingQueries extends QueryRegistry {
         case _ => None
       }
       val maxes = files.map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toURI),
-            new org.apache.hadoop.conf.Configuration()))
-        try {
-          val sts = rd.getFooter.getBlocks.asScala.toSeq.map { b =>
-            val c = b.getColumns.asScala
-              .find(_.getPath.toDotString == "ts").orNull
-            if (c == null ||
-              c.getPrimitiveType.getPrimitiveTypeName !=
-                org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-              None
-            else if (c.getStatistics == null || c.getStatistics.isEmpty ||
-              !c.getStatistics.hasNonNullValue) None
-            else toMicros(
-              c.getStatistics.genericGetMax.asInstanceOf[java.lang.Long].longValue,
-              c.getPrimitiveType.getLogicalTypeAnnotation)
-          }
-          if (sts.isEmpty || sts.exists(_.isEmpty)) None
-          else Some(sts.flatten.max)
-        } finally rd.close()
+        val sts = graft.ingest.Snapshots.readFooter(new org.apache.hadoop.fs.Path(f.toURI))
+          .getBlocks.asScala.toSeq.map { b =>
+          val c = b.getColumns.asScala
+            .find(_.getPath.toDotString == "ts").orNull
+          if (c == null ||
+            c.getPrimitiveType.getPrimitiveTypeName !=
+              org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
+            None
+          else if (c.getStatistics == null || c.getStatistics.isEmpty ||
+            !c.getStatistics.hasNonNullValue) None
+          else toMicros(
+            c.getStatistics.genericGetMax.asInstanceOf[java.lang.Long].longValue,
+            c.getPrimitiveType.getLogicalTypeAnnotation)
+        }
+        if (sts.isEmpty || sts.exists(_.isEmpty)) None
+        else Some(sts.flatten.max)
       }
       if (maxes.exists(_.isEmpty)) None else Some(maxes.flatten.max)
     } catch { case _: Throwable => None }

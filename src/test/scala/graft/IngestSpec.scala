@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import graft.ingest._
@@ -62,6 +64,64 @@ class IngestSpec extends SparkTestBase {
     assert(t.count() == 100)
     // embedded commas survived quoting
     assert(t.filter(col("title").contains(",")).count() > 0)
+    // the rows landed as a snapshot commit the consume reads
+    val c = ConsumeJob.consume(spark, root, "rev")
+    assert(c.totalReceived == 100 && c.topics.map(_.distinctPos).sum == 100)
+  }
+
+  // A fresh consumer of a table reads the COMMITTED snapshot: every
+  // live row exactly once, whatever else sits in the table directory.
+
+  test("after compaction a fresh consumer receives each live row once") {
+    val root = freshRoot()
+    ProduceJob.produceBatch(spark, root, "cp", topics = 2, numMessages = 1000)
+    Snapshots.appendBatch(spark, root, "cp",
+      ProduceJob.personProjection(spark.range(1000, 2000).toDF("cnt"), "cnt", "cp", 2),
+      partitionCols = Seq("topic"))
+    ProduceJob.commitManifest(root, "cp", 1999)
+    Snapshots.compact(spark, root, "cp")
+    // the superseded originals stay on disk until vacuum
+    assert(spark.read.parquet(Topics.tableDir(root, "cp")).count() == 4000)
+    val c = ConsumeJob.consume(spark, root, "cp")
+    assert(c.totalReceived == 2000)
+    assert(c.topics.map(_.distinctPos).sum == 2000)
+  }
+
+  test("after a merge-on-read delete a fresh consumer skips the deleted rows") {
+    val root = freshRoot()
+    ProduceJob.produceBatch(spark, root, "md", topics = 2, numMessages = 1000)
+    Snapshots.deleteMoR(spark, root, "md", col("ba") < 100)
+    val c = ConsumeJob.consume(spark, root, "md")
+    assert(c.totalReceived == 900)
+    assert(c.topics.map(_.minPos).min == 100)
+  }
+
+  test("a crashed staged write's orphan is never consumed") {
+    val root = freshRoot()
+    ProduceJob.produceBatch(spark, root, "or", topics = 1, numMessages = 500)
+    // what a writer that died between its staged write and its commit
+    // leaves: a marker-named file in the table, positions ≤ watermark
+    val tmp = Files.createTempDirectory("graft_orphan").resolve("w")
+    ProduceJob.personProjection(spark.range(0, 50).toDF("cnt"), "cnt", "or", 1)
+      .drop("topic").coalesce(1).write.parquet(tmp.toString)
+    val part = Files.list(tmp).iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    Files.move(part, Paths.get(Topics.tableDir(root, "or"), "topic=or",
+      Snapshots.CompactedPrefix + part.getFileName))
+    assert(spark.read.parquet(Topics.tableDir(root, "or")).count() == 550)
+    val c = ConsumeJob.consume(spark, root, "or")
+    assert(c.totalReceived == 500 && c.topics.map(_.distinctPos).sum == 500)
+  }
+
+  test("a window no file overlaps returns an empty report and keeps progress") {
+    val root = freshRoot()
+    ProduceJob.produceBatch(spark, root, "ew", topics = 2, numMessages = 1000)
+    assert(ConsumeJob.consume(spark, root, "ew").totalReceived == 1000)
+    assert(ConsumeJob.readProgress(root, "ew").contains(999L))
+    // the watermark moves past every committed position
+    ProduceJob.commitManifest(root, "ew", 1500)
+    val c = ConsumeJob.consume(spark, root, "ew")
+    assert(c == ConsumeJob.Report(0L, Nil, Some(1500L), skipped = false))
+    assert(ConsumeJob.readProgress(root, "ew").contains(999L))
   }
 
   test("composite positions compare numerically, not lexically (A8)") {

@@ -86,4 +86,17 @@ class SkewSpec extends SparkTestBase {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("spreadForCompute probes only exchange-free plans") {
+    // an exchange under the frame: the probe would materialize it (AQE)
+    // and the spread frame would run it again — no job at probe time
+    val agg = skewed.groupBy("k").agg(sum("v").as("s"))
+    val (out, jobs) = jobsDuring(SkewTools.spreadForCompute(agg))
+    assert(jobs.isEmpty, s"probe ran $jobs")
+    assert(out eq agg)
+    // a one-partition scan-shaped frame is still spread over the cores
+    val narrow = spark.range(0, 1000, 1, 1).toDF("i").filter(col("i") % 2 === 0)
+    assert(SkewTools.spreadForCompute(narrow).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism)
+  }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +22,38 @@ trait SparkTestBase extends AnyFunSuite {
     * behavior (manifest pruning, CoW rewrite granularity, compaction)
     * pin their layout explicitly through this instead of relying on
     * the write path staying naive. */
+  /** The Spark jobs `f` starts, each named by its description (or its
+    * first stage's call site when it has none). Job-start events reach
+    * listeners asynchronously; a barrier job started after `f` queues
+    * behind all of them, so once its event arrives the list is
+    * complete. */
+  def jobsDuring[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val id = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        seen.add(prop(key).orNull -> prop("spark.job.description")
+          .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse("")))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, id)
+      val r = try f finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, id + "-barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == id + "-barrier") && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(seen.asScala.exists(_._1 == id + "-barrier"), "listener never saw the barrier job")
+      (r, seen.asScala.collect { case (`id`, d) => d }.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def withMultiFileWrites[T](f: => T): T = {
     val k = "spark.graft.write.targetFileBytes"
     val prior = spark.conf.getOption(k)
