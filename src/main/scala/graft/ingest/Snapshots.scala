@@ -14,7 +14,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFileShim
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.functions.{col, lit, when}
 
 /** Versioned snapshot log for topic tables — the minimal transactional
   * lakehouse layer (the reference offloads to Delta; with no Delta jar
@@ -100,7 +100,7 @@ object Snapshots {
   /** Label the Spark jobs of an engine-internal action (guide §1.5 —
     * the UI and job-level profilers attribute DML/commit phases by
     * these descriptions). Restores the caller's description. */
-  private def labeled[T](spark: SparkSession, desc: String)(f: => T): T = {
+  private[ingest] def labeled[T](spark: SparkSession, desc: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("graft: " + desc)
@@ -635,40 +635,52 @@ object Snapshots {
     }
   }
 
+  /** The one optimistic-concurrency loop every writer commits through:
+    * `attempt` re-reads the head and writes the next version on top of
+    * it; losing the CREATE_NEW race to a concurrent writer
+    * ([[ConcurrentCommitException]]) re-runs it against the new head,
+    * up to 6 attempts in all, then the exception surfaces. */
+  private[ingest] def commitLoop(attempt: => Int): Int = {
+    var left = 6
+    var committed = -1
+    while (committed < 0)
+      try committed = attempt
+      catch { case _: ConcurrentCommitException if left > 1 => left -= 1 }
+    committed
+  }
+
   /** Commit the table's current state as the next version. Append
     * commits never conflict logically, so a lost race is retried
-    * against the re-read log (bounded; then the exception surfaces). */
-  def commit(root: String, prefix: String, maxPos: Long, retries: Int = 5,
-             txn: Option[String] = None): Int = {
+    * against the re-read log ([[commitLoop]]). */
+  def commit(root: String, prefix: String, maxPos: Long,
+             txn: Option[String] = None): Int = commitLoop {
     val prev = snapshot(root, prefix, None)
     // idempotent replays: a transaction id already in the log means
     // this commit's effect is present — no new version
     if (txn.exists(t => prev.exists(_.txns.contains(t)))) prev.get.version
     else {
-      val next = nextVersion(root, prefix)
-      val referenced = referencedFiles(root, prefix)
-      // a commit = the CURRENT snapshot's state + files that appeared
-      // since (never-yet-referenced paths). Deriving from the current
-      // file set — not from "everything on disk minus everything ever
-      // removed" — keeps restore sound: a file removed by an undone
-      // delete and re-pinned by the restore stays in the set.
-      val newFiles = (listDataFiles(root, prefix).toSet -- referenced)
-        // orphaned compaction rewrites (lost race / mid-compact crash)
-        // re-pack rows the originals still deliver — adopting them
-        // would double those rows
-        .filterNot(isCompacted)
-      val files = (prev.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
-        .toSeq.sorted
-      val stats = assembleStats(dataDir(root, prefix), files,
-        prev.map(_.stats).getOrElse(Seq.empty))
-      try writeSnapshot(root, prefix, next, maxPos, files, Seq.empty, "append",
-        prev.map(_.txns).getOrElse(Seq.empty) ++ txn, stats,
+      val (files, stats) = swept(root, prefix, prev)
+      writeSnapshot(root, prefix, nextVersion(root, prefix), maxPos, files, Seq.empty,
+        "append", prev.map(_.txns).getOrElse(Seq.empty) ++ txn, stats,
         extraFields = dvField(prev.map(_.dv).getOrElse(Seq.empty)), parent = prev)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (retries > 0) commit(root, prefix, maxPos, retries - 1, txn) else throw e
-      }
     }
+  }
+
+  /** The file set (and its stats) a listing-adoption commit pins: the
+    * `prev` snapshot's state + files that appeared since
+    * (never-yet-referenced paths). Deriving from the current file set —
+    * not from "everything on disk minus everything ever removed" —
+    * keeps restore sound: a file removed by an undone delete and
+    * re-pinned by the restore stays in the set. */
+  private def swept(root: String, prefix: String,
+                    prev: Option[Snapshot]): (Seq[String], Seq[FileStat]) = {
+    val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
+      // orphaned compaction rewrites (lost race / mid-compact crash)
+      // re-pack rows the originals still deliver — adopting them
+      // would double those rows
+      .filterNot(isCompacted)
+    val files = (prev.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles).toSeq.sorted
+    (files, assembleStats(dataDir(root, prefix), files, prev.map(_.stats).getOrElse(Seq.empty)))
   }
 
   // ------------------------- write-audit-publish -------------------------
@@ -681,8 +693,8 @@ object Snapshots {
     * staged files stay referenced (vacuum-safe) but invisible.
     * Idempotent per audit id. At 100 TB the whole flow is metadata:
     * stage, audit and publish never rewrite data files. */
-  def commitStaged(root: String, prefix: String, maxPos: Long, audit: String,
-                   retries: Int = 5): Int = {
+  def commitStaged(root: String, prefix: String, maxPos: Long,
+                   audit: String): Int = commitLoop {
     // the idempotent lookup runs BEFORE the charset require: a staged
     // commit that landed under an earlier, laxer contract (space, '/',
     // '(' were manifest-safe to the reader's quote-pair regex) must
@@ -695,24 +707,14 @@ object Snapshots {
         s"audit id must be non-empty [A-Za-z0-9._:-] (it is embedded " +
           s"in the commit log); got '$audit'")
       val prevPub = snapshot(root, prefix, None)
-      val newFiles = (listDataFiles(root, prefix).toSet -- referencedFiles(root, prefix))
-        .filterNot(isCompacted)
-      val files = (prevPub.map(_.files.toSet).getOrElse(Set.empty) ++ newFiles)
-        .toSeq.sorted
-      val stats = assembleStats(dataDir(root, prefix), files,
-        prevPub.map(_.stats).getOrElse(Seq.empty))
-      try writeSnapshot(root, prefix, nextVersion(root, prefix), maxPos, files,
+      val (files, stats) = swept(root, prefix, prevPub)
+      writeSnapshot(root, prefix, nextVersion(root, prefix), maxPos, files,
         Seq.empty, "staged", prevPub.map(_.txns).getOrElse(Seq.empty), stats,
         // the delta's built-in parent field IS the staged commit's
         // published-parent record (publish resolves the staged delta
         // against it)
         extraFields = Seq("audit" -> audit) ++
           dvField(prevPub.map(_.dv).getOrElse(Seq.empty)), parent = prevPub)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (retries > 0) commitStaged(root, prefix, maxPos, audit, retries - 1)
-          else throw e
-      }
     }
   }
 
@@ -728,7 +730,7 @@ object Snapshots {
     * staged delta, not the staged file set, is what publishes).
     * Idempotent: re-publishing an already-published audit returns the
     * existing publish version. */
-  def publish(root: String, prefix: String, audit: String, retries: Int = 5): Int = {
+  def publish(root: String, prefix: String, audit: String): Int = commitLoop {
     val sv = stagedVersion(root, prefix, audit).getOrElse(
       sys.error(s"no staged commit for audit '$audit' on $prefix"))
     versions(root, prefix)
@@ -747,15 +749,11 @@ object Snapshots {
           head.map(_.stats).getOrElse(Seq.empty) ++ staged.stats)
         val txns = (head.map(_.txns).getOrElse(Seq.empty) ++ staged.txns).distinct
         val dv = (head.map(_.dv).getOrElse(Seq.empty) ++ staged.dv).distinct
-        try writeSnapshot(root, prefix, nextVersion(root, prefix),
+        writeSnapshot(root, prefix, nextVersion(root, prefix),
           math.max(head.map(_.maxPos).getOrElse(-1L), staged.maxPos), files,
           Seq.empty, "publish", txns, stats,
           extraFields = Seq("publishedFrom" -> sv.toString) ++ dvField(dv),
           parent = head)
-        catch {
-          case e: ConcurrentCommitException =>
-            if (retries > 0) publish(root, prefix, audit, retries - 1) else throw e
-        }
       }
   }
 
@@ -1007,7 +1005,7 @@ object Snapshots {
 
   /** Deletion-vector sidecar directories live OUTSIDE the data dir so
     * directory-listing commits never adopt them as data. */
-  private def dvDir(root: String, prefix: String): Path =
+  private[ingest] def dvDir(root: String, prefix: String): Path =
     Paths.get(s"$root/$prefix._dv")
 
   /** Encode the active deletion-vector list for [[writeSnapshot]];
@@ -1372,26 +1370,28 @@ object Snapshots {
     * (time travel to an earlier version) see the old schema untouched.
     */
   def addColumn(root: String, prefix: String, name: String, ddlType: String,
-                defaultSql: Option[String] = None, retries: Int = 5): Int = {
+                defaultSql: Option[String] = None): Int = {
     require(Seq(name, ddlType).forall(s =>
       s.nonEmpty && !s.contains("|") && !s.contains("\"") && !s.contains("\\")),
       "column name/type must be non-empty without '|', quotes, or backslashes")
     require(defaultSql.forall(d => !d.contains("\"") && !d.contains("\\") && !d.contains("|")),
       "default must be a simple SQL literal (no double quotes, backslashes, or '|')")
+    evolve(root, prefix, "addcol", (Seq(name, ddlType) ++ defaultSql).mkString("|"))(cols =>
+      require(!cols.contains(name), s"column $name already exists in $prefix"))
+  }
+
+  /** A metadata-only schema-evolution commit: the head's state plus the
+    * `op` event `encoded`, after `check` accepts the current columns —
+    * both re-read on every [[commitLoop]] attempt. */
+  private def evolve(root: String, prefix: String, op: String, encoded: String)(
+      check: Seq[String] => Unit): Int = commitLoop {
     val prev = snapshot(root, prefix, None).getOrElse(
       sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    require(!currentColumns(root, prefix).contains(name),
-      s"column $name already exists in $prefix")
-    val encoded = (Seq(name, ddlType) ++ defaultSql).mkString("|")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "addcol", prev.txns, prev.stats,
+    check(currentColumns(root, prefix))
+    writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
+      Seq.empty, op, prev.txns, prev.stats,
       extraFields = Seq("addedCol" -> encoded) ++ dvField(prev.dv),
       parent = Some(prev))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) addColumn(root, prefix, name, ddlType, defaultSql, retries - 1)
-        else throw e
-    }
   }
 
   /** ALTER TABLE … RENAME COLUMN: a metadata-only commit; no file is
@@ -1401,48 +1401,26 @@ object Snapshots {
     * keyed by each file's PHYSICAL column name, so pruned reads on the
     * new name keep pre-rename files conservatively (stats narrow IO,
     * never semantics). */
-  def renameColumn(root: String, prefix: String, from: String, to: String,
-                   retries: Int = 5): Int = {
+  def renameColumn(root: String, prefix: String, from: String, to: String): Int = {
     require(from != to, "rename requires distinct names")
     require(Seq(from, to).forall(n =>
       n.nonEmpty && !n.contains("|") && !n.contains("\"") && !n.contains("\\")),
       "column names must be non-empty without '|', quotes, or backslashes")
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    val cols = currentColumns(root, prefix)
-    require(cols.contains(from), s"cannot rename absent column $from (schema: ${cols.mkString(", ")})")
-    require(!cols.contains(to), s"rename target $to already exists in $prefix")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "renamecol", prev.txns, prev.stats,
-      extraFields = Seq("addedCol" -> s"$from|$to") ++ dvField(prev.dv),
-      parent = Some(prev))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) renameColumn(root, prefix, from, to, retries - 1)
-        else throw e
+    evolve(root, prefix, "renamecol", s"$from|$to") { cols =>
+      require(cols.contains(from), s"cannot rename absent column $from (schema: ${cols.mkString(", ")})")
+      require(!cols.contains(to), s"rename target $to already exists in $prefix")
     }
   }
 
   /** ALTER TABLE … DROP COLUMN: metadata-only; the bytes stay until a
     * rewrite, time travel before this version still reads them. */
-  def dropColumn(root: String, prefix: String, name: String,
-                 retries: Int = 5): Int = {
+  def dropColumn(root: String, prefix: String, name: String): Int = {
     require(name.nonEmpty && !name.contains("|") && !name.contains("\"") &&
       !name.contains("\\"),
       "column name must be non-empty without '|', quotes, or backslashes")
-    val prev = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"no snapshot for $prefix — commit data before evolving the schema"))
-    val cols = currentColumns(root, prefix)
-    require(cols.contains(name), s"cannot drop absent column $name (schema: ${cols.mkString(", ")})")
-    require(cols.size > 1, s"cannot drop the last column of $prefix")
-    try writeSnapshot(root, prefix, nextVersion(root, prefix), prev.maxPos, prev.files,
-      Seq.empty, "dropcol", prev.txns, prev.stats,
-      extraFields = Seq("addedCol" -> name) ++ dvField(prev.dv),
-      parent = Some(prev))
-    catch {
-      case e: ConcurrentCommitException =>
-        if (retries > 0) dropColumn(root, prefix, name, retries - 1)
-        else throw e
+    evolve(root, prefix, "dropcol", name) { cols =>
+      require(cols.contains(name), s"cannot drop absent column $name (schema: ${cols.mkString(", ")})")
+      require(cols.size > 1, s"cannot drop the last column of $prefix")
     }
   }
 
@@ -1478,7 +1456,7 @@ object Snapshots {
     * evolution costs nothing at any table size. Replaying in version
     * order is what makes drop-then-readd yield the NEW column's
     * default (never the dropped bytes) and rename chains resolve. */
-  private def readFilesFilled(spark: SparkSession, root: String, prefix: String,
+  private[ingest] def readFilesFilled(spark: SparkSession, root: String, prefix: String,
                               files: Seq[String],
                               events: Seq[SchemaEvent],
                               dv: Seq[String] = Seq.empty,
@@ -1511,8 +1489,7 @@ object Snapshots {
               .map(n => s"$d/$n").toSeq))
           val dvRows = scanFiles(spark, dvBase, dvFiles)
             .select(org.apache.spark.sql.functions.concat(
-              org.apache.spark.sql.functions.lit(base.toString + "/"),
-              col("file")).as(DvPathCol),
+              lit(uriPrefix(root, prefix)), col("file")).as(DvPathCol),
               col("pos").as(DvPosCol))
           keyed.join(org.apache.spark.sql.functions.broadcast(dvRows),
             Seq(DvPathCol, DvPosCol), "left_anti")
@@ -1561,22 +1538,15 @@ object Snapshots {
   /** Column names the DV-keyed read path attaches to carry each row's
     * (file, position) identity; never visible to callers unless they
     * ask for positions. */
-  private val DvPathCol = "_graft_dv_path"
-  private val DvPosCol = "_graft_dv_pos"
+  private[ingest] val DvPathCol = "_graft_dv_path"
+  private[ingest] val DvPosCol = "_graft_dv_pos"
 
-  /** Distinct values of one STRING column collected to the driver
-    * without a shuffle: per-partition hash sets, union'd on the driver
-    * (guide §2.4 — remove the exchange outright). The file-attribution
-    * collects only ever need ≤ O(files) distinct names, so the
-    * `distinct()` they used to plan bought nothing but a whole extra
-    * exchange + AQE stage job per DML action; driver-side rows stay
-    * bounded by partitions × distinct-values — metadata scale. */
-  private def distinctCollected(df: DataFrame, column: String): Seq[String] =
-    df.select(col(column)).queryExecution.toRdd.mapPartitions { it =>
-      val s = scala.collection.mutable.HashSet[String]()
-      it.foreach(r => if (!r.isNullAt(0)) s += r.getUTF8String(0).toString)
-      s.iterator
-    }.collect().distinct.toSeq
+  /** What [[DvPathCol]] holds before a data file's table-relative name:
+    * the table directory's absolute path and a '/'. Deletion-vector
+    * sidecars store the name and the read path re-prefixes it; DML
+    * attribution strips it. */
+  private[ingest] def uriPrefix(root: String, prefix: String): String =
+    dataDir(root, prefix).toAbsolutePath.normalize.toString + "/"
 
   /** One column-range predicate in manifest-stat key space, paired
     * with the exact Catalyst predicate the pruned read re-applies
@@ -2009,20 +1979,9 @@ object Snapshots {
     // so they are invisible to the change feed too: each published
     // version diffs against the previous PUBLISHED one — a publish
     // commit's changes are the staged files, surfacing exactly when
-    // readers first see them.
-    val published = versions(root, prefix)
-      .filter(v => opOf(root, prefix, v) != "staged")
-    val added = published
-      .filter(v => v > fromVersion && v <= to.version)
-      .flatMap { v =>
-        val cur = snapshot(root, prefix, Some(v)).get
-        if (cur.op == "compact" || cur.op == "delete" ||
-          cur.op == "deletemor" || cur.op == "restore") Seq.empty
-        else (cur.files.toSet --
-          published.filter(_ < v).lastOption
-            .flatMap(pv => snapshot(root, prefix, Some(pv)).map(_.files.toSet))
-            .getOrElse(Set.empty)).toSeq
-      }.distinct.sorted
+    // readers first see them. ([[additionsInWindow]] applies the rule.)
+    val added = additionsInWindow(root, prefix, fromVersion, to.version)
+      .flatMap(_._2).distinct.sorted
     if (added.isEmpty) {
       // empty frame with the table's schema
       read(spark, root, prefix, Some(to.version)).limit(0)
@@ -2039,15 +1998,19 @@ object Snapshots {
     * can't collide; the rename happens AFTER the snapshot commit, so a
     * crash in between degrades that one version to file-grain change
     * attribution (readChangeFeed's documented fallback) — it can never
-    * misattribute rows. */
-  private def writeCdc(root: String, prefix: String,
-                       changes: DataFrame)(commit: => Int): Int = {
+    * misattribute rows. A commit that finds its transaction already
+    * landed returns that version: its records stand and ours drop. */
+  private[ingest] def writeCdc(root: String, prefix: String,
+                               changes: DataFrame)(commit: => Int): Int = {
     val staging = Paths.get(s"$root/$prefix._cdc")
       .resolve("staging-" + java.util.UUID.randomUUID().toString.take(8))
     labeled(changes.sparkSession, s"cdc write $prefix")(
       sizedForWrite(changes).write.mode("overwrite").parquet(staging.toString))
     val v = commit
-    Files.move(staging, cdcDir(root, prefix, v))
+    if (Files.exists(cdcDir(root, prefix, v)))
+      Using.resource(Files.walk(staging))(_.iterator().asScala.toSeq)
+        .reverse.foreach(Files.deleteIfExists)
+    else Files.move(staging, cdcDir(root, prefix, v))
     v
   }
 
@@ -2171,23 +2134,16 @@ object Snapshots {
     if (missing.nonEmpty)
       sys.error(s"restore $prefix to v$toVersion: ${missing.size} pinned file(s) " +
         s"no longer on disk (vacuumed?): ${missing.take(3).mkString(", ")}")
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
+    commitLoop {
       val cur = snapshot(root, prefix, None).get
       val removedNow = (cur.files.toSet -- target.files.toSet).toSeq.sorted
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
+      writeSnapshot(root, prefix, nextVersion(root, prefix),
         target.maxPos, target.files, removedNow, "restore",
         cur.txns, target.stats,
         // the TARGET's dv set, not the current one: a restore past a
         // merge-on-read delete must bring the deleted rows back
         extraFields = dvField(target.dv), parent = Some(cur))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
-      }
     }
-    committed
   }
 
   /** Compact the latest snapshot: per partition directory, rewrite its
@@ -2252,54 +2208,57 @@ object Snapshots {
       removed, snap.maxPos, txn = None)
   }
 
-  /** Shared commit loop for rewriting ops (compact/merge/delete): the
-    * new snapshot = (CURRENT latest files − `gone`) + `added`,
-    * recomputed on each attempt so a lost race against a concurrent
-    * append retries with that append's files included (append ⋈ rewrite
-    * never conflicts logically — they touch disjoint files). A
-    * concurrent REWRITE that claimed any of this op's input files is a
-    * real conflict — the output in `added` was derived from pre-race
-    * contents — and aborts instead of committing.
+  /** The commit of every rewriting op (compact, the row-level DML of
+    * [[RowRewrite]]): the new snapshot = (CURRENT latest files − `gone`)
+    * + `added`, plus the deletion-vector sidecar `dv` names (with the
+    * files it marks by position), recomputed on each [[commitLoop]]
+    * attempt so a lost race against a concurrent append retries with
+    * that append's files included (append ⋈ rewrite never conflicts
+    * logically — they touch disjoint files). Every attempt re-checks
+    * `txn` (a racing delivery of the same transaction already landed:
+    * its version stands) and the claimed inputs: a concurrent REWRITE
+    * that claimed a file this op replaces or marks is a real conflict —
+    * the output was derived from pre-race contents or positions — and
+    * aborts instead of committing.
     * (private[graft]: the conflict spec drives the stale-input case
     * directly — a live thread race can't be scheduled deterministically.) */
   private[graft] def commitRewrite(root: String, prefix: String, op: String,
                             gone: Set[String], added: Seq[String],
                             removed: Seq[String], maxPosFloor: Long,
-                            txn: Option[String]): Int = {
+                            txn: Option[String],
+                            dv: Option[(String, Set[String])] = None): Int = {
     val base = dataDir(root, prefix)
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
+    val inputs = gone ++ dv.fold(Set.empty[String])(_._2)
+    commitLoop {
       val cur = snapshot(root, prefix, None).get
-      val claimed = gone -- cur.files.toSet
-      if (claimed.nonEmpty)
-        throw new RewriteConflictException(op, claimed.toSeq.sorted)
-      val files = ((cur.files.toSet -- gone) ++ added).toSeq.sorted
-      // carry the dv set forward: entries for files leaving the set go
-      // stale harmlessly (the path join can't match them again), while
-      // entries for untouched files must keep deleting
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-        cur.maxPos max maxPosFloor, files, removed, op,
-        cur.txns ++ txn, assembleStats(base, files, cur.stats),
-        extraFields = dvField(cur.dv), parent = Some(cur))
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
+      if (txn.exists(cur.txns.contains)) cur.version
+      else {
+        val claimed = inputs -- cur.files.toSet
+        if (claimed.nonEmpty)
+          throw new RewriteConflictException(op, claimed.toSeq.sorted)
+        val files = ((cur.files.toSet -- gone) ++ added).toSeq.sorted
+        // carry the dv set forward: entries for files leaving the set go
+        // stale harmlessly (the path join can't match them again), while
+        // entries for untouched files must keep deleting
+        writeSnapshot(root, prefix, nextVersion(root, prefix),
+          cur.maxPos max maxPosFloor, files, removed, op,
+          cur.txns ++ txn, assembleStats(base, files, cur.stats),
+          extraFields = dvField(cur.dv ++ dv.map(_._1)), parent = Some(cur))
       }
     }
-    committed
   }
 
   /** MERGE INTO (copy-on-write upsert): rows of `source` replace
     * target rows with equal `keys` (WHEN MATCHED THEN UPDATE SET *);
-    * unmatched source rows are inserted (WHEN NOT MATCHED THEN
-    * INSERT *). Only files that actually contain matched keys are
+    * every source row is inserted (WHEN NOT MATCHED THEN INSERT *; a
+    * duplicate source key inserts every duplicate — no cardinality
+    * check). Only files that actually contain a live matched key are
     * rewritten — located by manifest-stats pruning on the first
-    * long-typed key, then an exact file-attribution semi join — so a
-    * small upsert against a 100 TB table rewrites a handful of files,
-    * never the table. Unreferenced readers keep snapshot isolation;
-    * `txn` makes replays idempotent (the exactly-once hook for
-    * [[upsertStream]]).
+    * integral key, then the [[RowRewrite]] pass's membership test
+    * against the source's key set — so a small upsert against a 100 TB
+    * table rewrites a handful of files, never the table. Unreferenced
+    * readers keep snapshot isolation; `txn` makes replays idempotent
+    * (the exactly-once hook for [[upsertStream]]).
     *
     * @return committed version (current version if `txn` already applied)
     */
@@ -2307,77 +2266,26 @@ object Snapshots {
             source: DataFrame, keys: Seq[String],
             txn: Option[String] = None): Int = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to merge into for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      enforceConstraints(root, prefix, source)
-      val base = dataDir(root, prefix)
-      val srcKeys = source.select(keys.map(col): _*).distinct().localCheckpoint(true)
-      // stage 1 — manifest pruning: a file whose stats exclude the
-      // source's key range can't contain a match and is never opened
-      val candidates = snap.stats.find(s => s.column == keys.head && s.typ == "L") match {
-        case Some(_) =>
-          val mm = srcKeys.agg(
-            org.apache.spark.sql.functions.min(keys.head),
-            org.apache.spark.sql.functions.max(keys.head)).head()
-          if (mm.isNullAt(0)) Seq.empty
-          else pruneFiles(root, prefix, keys.head, mm.getLong(0), mm.getLong(1), Some(snap.version))
-        case None => snap.files
-      }
-      // stage 2 — exact attribution: which candidate files hold a
-      // matched key (file names are metadata-scale; rows are not
-      // collected)
-      val matchedFiles: Seq[String] =
-        if (candidates.isEmpty) Seq.empty
-        else {
-          val withFile = scanFiles(spark, base, candidates)
-            .withColumn("_graft_file", input_file_name())
-          labeled(spark, "merge attribution")(
-            distinctCollected(withFile.join(srcKeys, keys, "left_semi"), "_graft_file"))
-            .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-              sys.error(s"unattributable file $uri")))
-            .sorted
-        }
-      // schema-aware rewrite read: matched files may predate an
-      // addColumn — fill defaults so the rewritten files materialize
-      // the current schema
-      val oldMatched =
-        if (matchedFiles.isEmpty) source.limit(0)
-        else readFilesFilled(spark, root, prefix, matchedFiles,
-          schemaEvents(root, prefix, Some(snap.version)), snap.dv)
-      // a using-columns join REORDERS output (keys first) — restore the
-      // table's logical order so rewritten files keep the canonical
-      // physical layout (mixed per-file orders make multi-file schema
-      // sampling nondeterministic)
-      val survivors = oldMatched.join(srcKeys, keys, "left_anti")
-        .select(oldMatched.columns.map(col): _*)
-      val out = survivors.unionByName(source)
-      // staged write + marker rename: merge output is invalid until its
-      // snapshot commits — commit() must never adopt it from a listing
-      val added = writeStaged(root, prefix, out,
-        if (out.columns.contains("topic")) Seq("topic") else Seq.empty)
-      // row-grain change records: a source row whose key existed is an
-      // update post-image, otherwise an insert; the replaced old rows
-      // ride along as update pre-images (Delta CDF parity) so a
-      // downstream consumer can SUBTRACT the old state — the piece an
-      // incremental aggregate/materialized view cannot reconstruct
-      // from post-images alone. Cost stays O(changes): keys/rows of
-      // the matched files only, never the table.
-      val oldKeys = oldMatched.select(keys.map(col): _*).distinct()
-        .withColumn("_graft_matched", org.apache.spark.sql.functions.lit(1))
-      val preImages = oldMatched.join(srcKeys, keys, "left_semi")
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("update_preimage"))
-      val cdc = source.join(oldKeys, keys, "left")
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.when(col("_graft_matched").isNotNull,
-            "update_postimage").otherwise("insert"))
-        .drop("_graft_matched")
-        .unionByName(preImages)
-      writeCdc(root, prefix, cdc) {
-        commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-          matchedFiles, snap.maxPos, txn)
+    RowRewrite.dml(spark, root, prefix, "merge", txn) { snap =>
+      val (srcKeys, _, ranges) = RowRewrite.materialize(spark, s"merge keys $prefix",
+        source.select(keys.map(col): _*).distinct(), Seq(keys.head -> keys.head))
+      RowRewrite.rewrite(spark, root, prefix, "merge", snap, txn, ranges)(
+        RowRewrite.member(_, srcKeys, keys)) { hits =>
+        // row-grain change records: a source row whose key held a live
+        // target row is an update post-image, otherwise an insert; the
+        // replaced rows ride as update pre-images (Delta CDF parity) so
+        // a downstream consumer can SUBTRACT the old state — cost
+        // O(changes), never the table
+        val replaced = hits.map(_.image(col(RowRewrite.Hit)))
+        val posts = replaced.fold(source.withColumn(RowRewrite.Hit, lit(false)))(old =>
+          RowRewrite.member(source, old.select(keys.map(col): _*), keys))
+          .withColumn("_change_type", when(col(RowRewrite.Hit), "update_postimage")
+            .otherwise("insert")).drop(RowRewrite.Hit)
+        Some(RowRewrite.Output(
+          out = Some(hits.fold(source)(_.image(!col(RowRewrite.Hit)).unionByName(source))),
+          cdc = _ => replaced.fold(posts)(r =>
+            posts.unionByName(r.withColumn("_change_type", lit("update_preimage")))),
+          checked = Some(source)))
       }
     }
   }
@@ -2415,10 +2323,11 @@ object Snapshots {
   }
 
   /** Throw if any `df` row violates a registered constraint. */
-  private def enforceConstraints(root: String, prefix: String,
-                                 df: DataFrame): Unit =
+  private[ingest] def enforceConstraints(root: String, prefix: String,
+                                         df: DataFrame): Unit =
     constraints(root, prefix).foreach { case (name, pred) =>
-      val bad = df.filter(s"NOT ($pred)").count()
+      val bad = labeled(df.sparkSession, s"check $name $prefix")(
+        df.filter(s"NOT ($pred)").count())
       if (bad > 0) throw new ConstraintViolationException(name, bad)
     }
 
@@ -2436,59 +2345,19 @@ object Snapshots {
 
   /** DELETE (copy-on-write): rows matching `predicate` disappear from
     * the next snapshot. Only files that actually contain matching rows
-    * are rewritten (located by an `input_file_name` scan under the
-    * predicate — at scale, push a stats-prunable range predicate);
-    * untouched files survive as-is, older versions keep reading the
-    * deleted rows (snapshot isolation until vacuum). */
+    * are rewritten (the [[RowRewrite]] pass attributes them); untouched
+    * files survive as-is, older versions keep reading the deleted rows
+    * (snapshot isolation until vacuum). */
   def delete(spark: SparkSession, root: String, prefix: String,
              predicate: org.apache.spark.sql.Column,
-             txn: Option[String] = None): Int = {
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to delete from for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      val base = dataDir(root, prefix)
-      // SQL DELETE semantics: a row is deleted only when the predicate
-      // is TRUE — a NULL predicate keeps the row (like Delta). Coalesce
-      // to false so attribution and survivorship agree on null rows.
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
-      // schema-aware: the delete predicate may reference an added
-      // column (matching its default on pre-evolution rows)
-      val evs = schemaEvents(root, prefix, Some(snap.version))
-      // position-keyed read, not input_file_name(): with deletion
-      // vectors active the plan holds two file sources and
-      // input_file_name() refuses to bind
-      val withFile = readFilesFilled(spark, root, prefix, snap.files, evs,
-        snap.dv, keepPositions = true)
-      val matchedFiles = withFile.filter(matches)
-        .select(DvPathCol).distinct()
-        .collect().map(_.getString(0))
-        .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-          sys.error(s"unattributable file $uri")))
-        .toSeq.sorted
-      if (matchedFiles.isEmpty) snap.version // nothing to delete
-      else {
-        // filled read, not a plain one: survivors of a pre-evolution
-        // file must materialize their filled defaults into the rewrite
-        // (a plain read would write the old physical schema, and the
-        // rewritten file — which postdates the addcol — would NULL-fill
-        // where the default belonged); CDC pre-images below need the
-        // same shape
-        val touched = readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
-        val survivors = touched.filter(!matches)
-        val added = writeStaged(root, prefix, survivors,
-          if (survivors.columns.contains("topic")) Seq("topic") else Seq.empty)
-        // row-grain change records: the deleted rows' pre-images
-        val cdc = touched.filter(matches)
-          .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
-        writeCdc(root, prefix, cdc) {
-          commitRewrite(root, prefix, "delete", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
-        }
+             txn: Option[String] = None): Int =
+    RowRewrite.dml(spark, root, prefix, "delete", txn) { snap =>
+      RowRewrite.rewrite(spark, root, prefix, "delete", snap, txn, Seq.empty)(
+        _.withColumn(RowRewrite.Hit, RowRewrite.matching(predicate))) {
+        _.map(h => RowRewrite.Output(Some(h.image(!col(RowRewrite.Hit))),
+          _ => h.image(col(RowRewrite.Hit)).withColumn("_change_type", lit("delete"))))
       }
     }
-  }
 
   /** UPDATE (copy-on-write): rows matching `predicate` get `sets`
     * applied; everything else survives byte-identical. Only files that
@@ -2499,151 +2368,46 @@ object Snapshots {
     *    NULL-keeps rule, mirrored);
     *  - assignments are SIMULTANEOUS — every SET value is evaluated
     *    against the OLD row (`SET a = b, b = a` swaps), which is why
-    *    all assignments ride ONE select over the pre-image;
+    *    all assignments ride ONE select over the pre-image, beside it
+    *    in the pass;
     *  - assigned values are cast to the column's declared type.
     * CHECK constraints are enforced on the POST-image of matched rows
     * before any commit; updates ride the change feed as
     * update_preimage/update_postimage pairs (Delta CDF parity). */
   /** @param ranges advisory manifest-prunable bounds extracted from
     *   the predicate's conjuncts (the DML rule supplies them): the
-    *   attribution read opens only files whose stats can overlap EVERY
-    *   range — a selective UPDATE against a 100 TB table reads a
-    *   handful of candidate files, never the table. Advisory only:
-    *   the exact predicate still decides row membership. */
+    *   pass opens only files whose stats can overlap EVERY range — a
+    *   selective UPDATE against a 100 TB table reads a handful of
+    *   candidate files, never the table. Advisory only: the exact
+    *   predicate still decides row membership. */
   def updateWhere(spark: SparkSession, root: String, prefix: String,
                   predicate: org.apache.spark.sql.Column,
                   sets: Seq[(String, org.apache.spark.sql.Column)],
                   txn: Option[String] = None,
                   ranges: Seq[StatRange] = Seq.empty): Int = {
     require(sets.nonEmpty, "UPDATE needs at least one assignment")
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to update for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
-      val evs = schemaEvents(root, prefix, Some(snap.version))
-      val candidates =
-        if (ranges.isEmpty) snap.files
-        else pruneFilesMulti(root, prefix, ranges, Some(snap.version))
-      if (candidates.isEmpty) return snap.version // stats exclude every file
-      val withFile = readFilesFilled(spark, root, prefix, candidates, evs,
-        snap.dv, keepPositions = true)
-      val hit = "_graft_hit"
-      val setMap = sets.toMap
-      def newCol(c: String) = s"_graft_new_$c"
-      // r15 (guide §5: driver work in the query path; §2.4 fewer
-      // passes): the old shape planned and executed the predicate + SET
-      // expressions — including any decorrelated-subquery joins — in
-      // FOUR separate actions (attribution, staged write, CDC
-      // pre-image, CDC post-image), each a full QueryExecution with its
-      // own AQE stages, broadcasts and Hadoop-conf serialization;
-      // per-action fixed driver cost dominated small DML (q305–q307
-      // profile: ~60 ms driver gap per job, ~12 jobs per statement).
-      // Fused shape: ONE pass over the candidate files evaluates the
-      // predicate and every SET value (pre+post image columns side by
-      // side, plus the row's file identity) into a materialized frame;
-      // attribution is then a shuffle-free distinct over it, and the
-      // rewrite output and both CDC images are trivial column
-      // selections — nothing downstream re-plans joins or subqueries.
-      // Gated by the candidates' size estimate: the materialized rows
-      // live in executor memory/disk (localCheckpoint), a win for the
-      // selective-DML shape but not for a many-GB rewrite — those keep
-      // the recompute path below, semantically identical (same
-      // expressions over the same pre-image rows; assignments stay
-      // simultaneous, constraints still precede any commit).
-      val fuseMax = BigInt(spark.conf.get("spark.graft.dml.fuseMaxBytes",
-        (2L << 30).toString).toLong)
-      val candEst =
-        try withFile.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }
-      if (candEst <= fuseMax) {
-        val dataCols = withFile.columns
-          .filterNot(c => c == DvPathCol || c == DvPosCol).toSeq
+    val setMap = sets.toMap
+    val hit = col(RowRewrite.Hit)
+    def newCol(c: String) = s"_graft_new_$c"
+    RowRewrite.dml(spark, root, prefix, "update", txn) { snap =>
+      RowRewrite.rewrite(spark, root, prefix, "update", snap, txn, ranges) { t =>
+        val dataCols = t.columns.toSeq.filterNot(c => c == DvPathCol || c == DvPosCol)
         require(setMap.keySet.subsetOf(dataCols.toSet),
           s"UPDATE of unknown column(s): ${(setMap.keySet -- dataCols).mkString(", ")}")
-        val assigned = dataCols.filter(setMap.contains)
-        // attribution rides the SAME job as the rewrite evaluation: an
-        // observe() of the hit rows' distinct file names (bounded by
-        // the candidate file count — metadata scale) — zero extra
-        // actions for the attribution question
-        val filesMetric = "graft_update_files"
-        val observed = withFile.withColumn(hit, matches)
-          .select(dataCols.map(col) ++ Seq(col(DvPathCol), col(hit)) ++
-            assigned.map(c => org.apache.spark.sql.functions
-              .when(col(hit), setMap(c).cast(withFile.schema(c).dataType))
-              .otherwise(col(c)).as(newCol(c))): _*)
-          .observe(filesMetric, org.apache.spark.sql.functions.collect_set(
-            org.apache.spark.sql.functions.when(col(hit), col(DvPathCol))))
-        val combined = labeled(spark, "update rewrite")(observed.localCheckpoint(true))
-        val matchedUris = observed.queryExecution.observedMetrics.get(filesMetric)
-          .map(_.getSeq[String](0).sorted)
-          .getOrElse(labeled(spark, "update attribution")(
-            distinctCollected(combined.filter(col(hit)), DvPathCol)).sorted)
-        val matchedFiles = matchedUris
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
-        if (matchedFiles.isEmpty) snap.version // nothing matched
-        else {
-          val rows = combined.filter(col(DvPathCol).isin(matchedUris: _*))
-          val out = rows.select(dataCols.map { c =>
-            if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
-          }: _*)
-          val post = rows.filter(col(hit)).select(dataCols.map { c =>
-            if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)
-          }: _*)
-          enforceConstraints(root, prefix, post)
-          val added = writeStaged(root, prefix, out,
-            if (dataCols.contains("topic")) Seq("topic") else Seq.empty)
-          val pre = rows.filter(col(hit)).select(dataCols.map(col): _*)
-          val cdc = pre
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(post
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("update_postimage")))
-          writeCdc(root, prefix, cdc) {
-            commitRewrite(root, prefix, "update", matchedFiles.toSet, added,
-              matchedFiles, snap.maxPos, txn)
-          }
-        }
-      } else {
-        val matchedFiles = labeled(spark, "update attribution")(
-          distinctCollected(withFile.filter(matches), DvPathCol))
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
-        if (matchedFiles.isEmpty) snap.version // nothing matched
-        else {
-          val touched = readFilesFilled(spark, root, prefix, matchedFiles, evs, snap.dv)
-          require(setMap.keySet.subsetOf(touched.columns.toSet),
-            s"UPDATE of unknown column(s): ${(setMap.keySet -- touched.columns).mkString(", ")}")
-          // the hit column pins the predicate's PRE-image verdict per
-          // row: the post-image select below must not re-evaluate the
-          // predicate against assigned values
-          val marked = touched.withColumn(hit, matches)
-          val out = marked.select(touched.columns.map { c =>
-            setMap.get(c) match {
-              case Some(v) => org.apache.spark.sql.functions
-                .when(col(hit), v.cast(touched.schema(c).dataType))
-                .otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          } :+ col(hit): _*)
-          enforceConstraints(root, prefix, out.filter(col(hit)).drop(hit))
-          val added = writeStaged(root, prefix, out.drop(hit),
-            if (touched.columns.contains("topic")) Seq("topic") else Seq.empty)
-          val cdc = touched.filter(matches)
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("update_preimage"))
-            .unionByName(out.filter(col(hit)).drop(hit)
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("update_postimage")))
-          writeCdc(root, prefix, cdc) {
-            commitRewrite(root, prefix, "update", matchedFiles.toSet, added,
-              matchedFiles, snap.maxPos, txn)
-          }
+        t.withColumn(RowRewrite.Hit, RowRewrite.matching(predicate))
+          .select(dataCols.map(col) ++ Seq(col(DvPathCol), hit) ++
+            dataCols.filter(setMap.contains).map(c =>
+              when(hit, setMap(c).cast(t.schema(c).dataType))
+                .otherwise(col(c)).as(newCol(c))): _*)
+      } {
+        _.map { h =>
+          val post = h.rows.select(h.dataCols.map(c =>
+            if (setMap.contains(c)) col(newCol(c)).as(c) else col(c)) :+ hit: _*)
+          val changed = post.filter(hit).drop(RowRewrite.Hit)
+          RowRewrite.Output(Some(post.drop(RowRewrite.Hit)),
+            _ => h.image(hit).withColumn("_change_type", lit("update_preimage"))
+              .unionByName(changed.withColumn("_change_type", lit("update_postimage"))),
+            checked = Some(changed))
         }
       }
     }
@@ -2710,88 +2474,59 @@ object Snapshots {
                 tableSchema: org.apache.spark.sql.types.StructType,
                 txn: Option[String] = None,
                 equiKeys: Seq[(String, String)] = Seq.empty): Int = {
-    import org.apache.spark.sql.functions.{expr, lit, when}
+    import org.apache.spark.sql.functions.expr
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
     require(notMatched.forall(_.set.isDefined),
       "WHEN NOT MATCHED supports only INSERT")
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to merge into for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
+    RowRewrite.dml(spark, root, prefix, "merge", txn) { snap =>
       val evs = schemaEvents(root, prefix, Some(snap.version))
       val badSrc = source.columns.filterNot(_.startsWith(SrcColPrefix))
       require(badSrc.isEmpty,
         s"merge source columns must carry $SrcColPrefix: ${badSrc.mkString(", ")}")
-      val src = source.localCheckpoint(true)
       val cond = expr(condSql)
       // a SCHEMA-TYPED empty target (readFilesFilled on zero files is
       // column-less, which would fail the condition's resolution) —
       // MERGE into a fresh CREATE TABLE is pure insert and must work
       def emptyTarget: DataFrame = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(tableSchema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField(DvPathCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField(DvPosCol,
-            org.apache.spark.sql.types.LongType))))
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        tableSchema.add(DvPathCol, "string").add(DvPosCol, "long"))
       // stage-1 manifest pruning (the keyed merge's discipline): the
       // first equi key whose target column carries INT64 stats bounds
-      // the candidate set by the source's [min, max] — files outside it
-      // can't match and are never opened
-      val candidates: Seq[String] =
-        if (snap.files.isEmpty) Seq.empty
-        else {
-          def integral(c: String): Boolean =
-            src.schema.find(_.name == c).exists(f => f.dataType match {
-              case org.apache.spark.sql.types.LongType |
-                   org.apache.spark.sql.types.IntegerType |
-                   org.apache.spark.sql.types.ShortType => true
-              case _ => false
-            })
-          equiKeys.collectFirst {
-            case (tc, sc) if integral(sc) &&
-                snap.stats.exists(s => s.column == tc && s.typ == "L") =>
-              val mm = src.agg(
-                org.apache.spark.sql.functions.min(col(sc).cast("long")),
-                org.apache.spark.sql.functions.max(col(sc).cast("long"))).head()
-              if (mm.isNullAt(0)) Seq.empty[String]
-              else pruneFiles(root, prefix, tc, mm.getLong(0), mm.getLong(1),
-                Some(snap.version))
-          }.getOrElse(snap.files)
-        }
-      // stage-2 attribution: which candidate files hold a matched row
+      // the candidates by the source's range, observed on the job that
+      // materializes the source. WHEN NOT MATCHED BY SOURCE must see
+      // every target row, so it rewrites every file.
+      val (src, _, ranges) = RowRewrite.materialize(spark, s"merge source $prefix", source,
+        if (notMatchedBySource.nonEmpty) Seq.empty
+        else equiKeys.filter { case (tc, _) => snap.stats.exists(s => s.column == tc && s.typ == "L") })
+      val candidates =
+        if (ranges.isEmpty) snap.files else pruneFilesMulti(snap, evs, ranges)
       val targetAll =
         if (candidates.isEmpty) emptyTarget
         else readFilesFilled(spark, root, prefix, candidates, evs,
           snap.dv, keepPositions = true)
-      val matchedFiles: Seq[String] =
-        if (notMatchedBySource.nonEmpty) snap.files
-        else labeled(spark, "merge attribution")(
-          distinctCollected(targetAll.join(src, cond, "left_semi"), DvPathCol))
-          .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-            sys.error(s"unattributable file $uri")))
-          .sorted
-      val touched =
-        if (matchedFiles.isEmpty) targetAll.limit(0)
-        else readFilesFilled(spark, root, prefix, matchedFiles, evs,
-          snap.dv, keepPositions = true)
+      // stage-2 attribution: the files holding a row the condition
+      // matches (the merge's hit expression is the semi join itself)
+      val (matchedFiles, touched) =
+        if (candidates.isEmpty || notMatchedBySource.nonEmpty) (candidates, targetAll)
+        else {
+          val uris = RowRewrite.hitUris(spark, "merge",
+            targetAll.join(src, cond, "left_semi").withColumn(RowRewrite.Hit, lit(true)))
+          (RowRewrite.attribute(root, prefix, candidates, uris),
+            RowRewrite.within(targetAll, uris))
+        }
       val tSchema = org.apache.spark.sql.types.StructType(
         touched.schema.filterNot(f => f.name == DvPathCol || f.name == DvPosCol))
       val tCols = tSchema.fieldNames.toSeq
-      val pairs = touched.join(src, cond, "inner")
-      val targetOnly = touched.join(src, cond, "left_anti")
-      val srcOnly = src.join(touched, cond, "left_anti")
-      // first-wins clause selection: 1-based fired-clause index, 0 = none
-      def fired(clauses: Seq[MergeClause]): org.apache.spark.sql.Column =
-        clauses.zipWithIndex.foldRight(lit(0)) { case ((cl, i), rest) =>
-          when(cl.condition.map(expr).getOrElse(lit(true)), lit(i + 1))
-            .otherwise(rest)
-        }
-      def deleteIdx(clauses: Seq[MergeClause]): Seq[Integer] =
-        clauses.zipWithIndex.collect { case (c, i) if c.set.isEmpty =>
-          Integer.valueOf(i + 1) }
       val act = "_graft_act"
+      // first-wins clause selection: the 1-based index of the clause
+      // that fires on each row; rows no clause fires on drop out
+      def firing(df: DataFrame, clauses: Seq[MergeClause]): DataFrame =
+        df.withColumn(act, clauses.zipWithIndex.foldRight(lit(0)) { case ((cl, i), rest) =>
+          when(cl.condition.map(expr).getOrElse(lit(true)), lit(i + 1)).otherwise(rest)
+        }).filter(col(act) =!= 0)
+      def deletes(clauses: Seq[MergeClause]): org.apache.spark.sql.Column =
+        col(act).isin(clauses.zipWithIndex.collect { case (c, i) if c.set.isEmpty => i + 1 }: _*)
       /** SET application over already-fired rows: CASE per target
         * column on the fired index; `insert` makes NULL (not the old
         * value) the unassigned base. */
@@ -2808,13 +2543,13 @@ object Snapshots {
             }
           }.as(c)
         }: _*)
-      // matched family: evaluate per PAIR, keep firing pairs only;
-      // a target row whose every pair is unfired survives ONCE via the
-      // row-id anti join below (never through the pair rows — a
-      // multi-match row would duplicate)
+      // matched pairs / target-only / source-only rows come from three
+      // joins. Matched family: evaluate per PAIR, keep firing pairs
+      // only; a target row whose every pair is unfired survives ONCE
+      // via the row-id anti join below (never through the pair rows —
+      // a multi-match row would duplicate)
       val mFired = labeled(spark, "merge fired pairs")(
-        pairs.withColumn(act, fired(matched))
-          .filter(col(act) =!= 0).localCheckpoint(true))
+        firing(touched.join(src, cond, "inner"), matched).localCheckpoint(true))
       if (matched.nonEmpty && matchedFiles.nonEmpty) {
         // SQL's cardinality rule, modification-scoped like Delta's:
         // >1 FIRING pair for one target row is ambiguous; unfired
@@ -2823,124 +2558,44 @@ object Snapshots {
           .count().filter(col("count") > 1).count()
         if (dups > 0) throw new MergeCardinalityException(dups)
       }
-      // r15 fusion (guide §5, same discipline as updateWhere): the
-      // staged write and the CDC write both used to re-plan and
-      // re-execute the target-only / source-only joins (and the
-      // survivor anti join) — materialize each fired family ONCE and
-      // make both writes trivial projections. Gated by the matched
-      // files' size estimate: survivors is touched-scale, so a many-GB
-      // rewrite keeps the recompute shape (identical semantics).
-      val fuseMax = BigInt(spark.conf.get("spark.graft.dml.fuseMaxBytes",
-        (2L << 30).toString).toLong)
-      val doFuse = (try touched.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }) <= fuseMax
-      def fuse(df: DataFrame, desc: String): DataFrame =
-        if (doFuse) labeled(spark, desc)(df.localCheckpoint(true)) else df
-      // an absent clause family folds to filter(false) → LocalRelation,
-      // so only materialize when the clause exists (no wasted job)
-      val sFired = if (notMatchedBySource.isEmpty)
-        targetOnly.withColumn(act, fired(notMatchedBySource)).filter(col(act) =!= 0)
-      else fuse(targetOnly.withColumn(act, fired(notMatchedBySource))
-        .filter(col(act) =!= 0), "merge fired target-only")
+      // materialize each fired family ONCE under the pass's gate, so the
+      // staged write and the change-record write are projections that
+      // re-plan none of the joins. An absent clause family folds to
+      // filter(false) → LocalRelation: materializing it wastes a job.
+      def fuse(df: DataFrame, desc: String, present: Boolean = true): DataFrame =
+        if (present && RowRewrite.fits(touched)) labeled(spark, desc)(df.localCheckpoint(true))
+        else df
+      val sFired = fuse(firing(touched.join(src, cond, "left_anti"), notMatchedBySource),
+        "merge fired target-only", notMatchedBySource.nonEmpty)
       val firedKeys = mFired.select(col(DvPathCol), col(DvPosCol))
         .unionByName(sFired.select(col(DvPathCol), col(DvPosCol)))
       val survivors = fuse(touched
         .join(org.apache.spark.sql.functions.broadcast(firedKeys),
           Seq(DvPathCol, DvPosCol), "left_anti")
         .select(tCols.map(col): _*), "merge survivors")
-      val mUpdates = applySets(mFired.filter(!col(act).isin(deleteIdx(matched): _*)),
-        matched, insert = false)
-      val sUpdates = applySets(sFired.filter(!col(act).isin(deleteIdx(notMatchedBySource): _*)),
-        notMatchedBySource, insert = false)
-      val srcFired = if (notMatched.isEmpty)
-        srcOnly.withColumn(act, fired(notMatched)).filter(col(act) =!= 0)
-      else fuse(srcOnly.withColumn(act, fired(notMatched))
-        .filter(col(act) =!= 0), "merge fired inserts")
-      val inserts = applySets(srcFired, notMatched, insert = true)
+      val updates = applySets(mFired.filter(!deletes(matched)), matched, insert = false)
+        .unionByName(applySets(sFired.filter(!deletes(notMatchedBySource)),
+          notMatchedBySource, insert = false))
+      val inserts = applySets(fuse(firing(src.join(touched, cond, "left_anti"), notMatched),
+        "merge fired inserts", notMatched.nonEmpty), notMatched, insert = true)
       if (matchedFiles.isEmpty && inserts.isEmpty) snap.version
       else {
-        val changedPost = mUpdates.unionByName(sUpdates).unionByName(inserts)
-        enforceConstraints(root, prefix, changedPost)
-        val out = survivors.unionByName(mUpdates)
-          .unionByName(sUpdates).unionByName(inserts)
-        val added = writeStaged(root, prefix, out,
-          if (tCols.contains("topic")) Seq("topic") else Seq.empty)
-        // change feed: deletes = firing DELETE-clause pre-images;
-        // updates carry both images; inserts their post-image
-        def split(firedDf: DataFrame, clauses: Seq[MergeClause]) = {
-          val d = deleteIdx(clauses)
-          val del = if (d.isEmpty) firedDf.limit(0)
-                    else firedDf.filter(col(act).isin(d: _*))
-          val upd = firedDf.filter(!col(act).isin(d: _*))
-          (del.select(tCols.map(col): _*), upd.select(tCols.map(col): _*))
-        }
-        val (mDel, mUpdPre) = split(mFired, matched)
-        val (sDel, sUpdPre) = split(sFired, notMatchedBySource)
-        val cdc = mDel.unionByName(sDel)
-          .withColumn("_change_type", lit("delete"))
-          .unionByName(mUpdPre.unionByName(sUpdPre)
-            .withColumn("_change_type", lit("update_preimage")))
-          .unionByName(mUpdates.unionByName(sUpdates)
-            .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
-        writeCdc(root, prefix, cdc) {
-          commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
-        }
+        // change feed: firing DELETE clauses' pre-images, both images of
+        // every update, the inserts' post-images
+        def preImages(fired: DataFrame, clauses: Seq[MergeClause]) =
+          fired.select(tCols.map(col) :+ when(deletes(clauses), "delete")
+            .otherwise("update_preimage").as("_change_type"): _*)
+        val changed = updates.unionByName(inserts)
+        RowRewrite.commit(spark, root, prefix, "merge", snap, txn, matchedFiles,
+          RowRewrite.Output(Some(survivors.unionByName(changed)),
+            _ => preImages(mFired, matched).unionByName(preImages(sFired, notMatchedBySource))
+              .unionByName(updates.withColumn("_change_type", lit("update_postimage")))
+              .unionByName(inserts.withColumn("_change_type", lit("insert"))),
+            checked = Some(changed)))
       }
     }
   }
 
-  /** INSERT OVERWRITE (full-table replace, copy-on-write): `data`
-    * becomes the table's ENTIRE content in one commit. New files land
-    * beside the old bytes (append-mode write, then rename-marked so a
-    * racing plain [[commit]] can never adopt them as an append); one
-    * "overwrite" version then pins exactly the new set and records
-    * every previous file as removed. Old versions stay readable —
-    * time travel and [[restore]] work across an overwrite — and
-    * [[vacuum]] reclaims the replaced bytes later. Deletion vectors
-    * die with the files they pointed at (the new snapshot carries
-    * none). Fresh footer stats are assembled for the new files only,
-    * so the manifest metadata paths (COUNT(*) / MIN / MAX / LIMIT
-    * prefix / range pruning) are live immediately after the replace.
-    *
-    * Change feed: the replaced rows ride as row-grain "delete"
-    * pre-images and the new rows as "insert"s — the same contract
-    * [[delete]] and [[merge]] keep, so a replica applying the feed
-    * converges. Both images are read back from committed bytes (the
-    * old snapshot's files, the newly written files), never from
-    * re-evaluating `data`'s plan.
-    *
-    * Concurrency: overwrite REPLACES the state at commit time,
-    * recomputed per retry — a commit that lands mid-overwrite is
-    * replaced too (Delta's serializable overwrite answer), never
-    * resurrected next to the new content. Idempotent per `txn`.
-    * At 100 TB: the write cost is the new data (unavoidable — that IS
-    * the operation); the replace itself is one manifest commit. */
-  /** Write `data` as new parquet files under the table dir and
-    * rename-mark them so a racing listing-adoption [[commit]] can
-    * never sweep them in — the caller pins them in its own snapshot
-    * commit (a crash before that commit leaves marked orphans no
-    * commit ever adopts; [[vacuum]] reclaims them). Returns the
-    * marked names relative to the table dir, sorted. */
-  /** Write `data` through a STAGING directory beside the table dir and
-    * move the parquet output into place under rename-markers. The
-    * writer learns its own output files from the staging listing —
-    * O(files written), NEVER a walk of the table directory (at 1M
-    * files the before/after-listing idiom cost two full tree walks per
-    * write) — and a racing listing-adoption [[commit]] can never sweep
-    * half-written output: the staging dir lives outside the data dir
-    * and the moved files carry the marker prefix no sweep adopts.
-    * Same-filesystem moves are renames — zero data bytes.
-    *
-    * Concurrent writers to ONE table are safe by construction (r9
-    * advisor target): each writer owns a UUID-named staging dir (no
-    * shared mutable path), the moved part files carry task-unique
-    * names (a collision would fail the move loudly, never clobber),
-    * and a writer that crashes mid-move leaves only marker-named
-    * orphans plus its staging dir — no commit adopts either, and
-    * [[vacuum]] reclaims both age-gated. The racing COMMITS serialize
-    * on the log's CREATE_NEW as always. */
   /** Output-partition budget for a staged write (guide §6: aim for
     * few, well-sized files, not one tiny file per input partition).
     * The optimizer's size estimate picks ceil(bytes / target) writer
@@ -2958,7 +2613,7 @@ object Snapshots {
   private def sizedForWrite(data: DataFrame): DataFrame = {
     // an EXPLICIT repartition/coalesce on top of the frame is a caller
     // choosing the output layout (compact's targetFileBytes split,
-    // cluster/clusterZOrder's repartitionByRange(targetFiles)) — honor
+    // clusterZOrder's repartitionByRange(targetFiles)) — honor
     // it, exactly like AQE honors user-specified repartitions. Look
     // through output-preserving wrappers only: projections/aliases,
     // plus per-partition sorts and filters (r14 ADVICE: a caller's
@@ -3017,6 +2672,28 @@ object Snapshots {
     if (n < cur) data.coalesce(n) else data
   }
 
+  /** The `topic` partition column, when `df` carries one. */
+  private[ingest] def topicCols(df: DataFrame): Seq[String] =
+    Seq("topic").filter(df.columns.contains)
+
+  /** Write `data` through a STAGING directory beside the table dir and
+    * move the parquet output into place under rename-markers. The
+    * writer learns its own output files from the staging listing —
+    * O(files written), NEVER a walk of the table directory (at 1M
+    * files the before/after-listing idiom cost two full tree walks per
+    * write) — and a racing listing-adoption [[commit]] can never sweep
+    * half-written output: the staging dir lives outside the data dir
+    * and the moved files carry the marker prefix no sweep adopts.
+    * Same-filesystem moves are renames — zero data bytes.
+    *
+    * Concurrent writers to ONE table are safe by construction (r9
+    * advisor target): each writer owns a UUID-named staging dir (no
+    * shared mutable path), the moved part files carry task-unique
+    * names (a collision would fail the move loudly, never clobber),
+    * and a writer that crashes mid-move leaves only marker-named
+    * orphans plus its staging dir — no commit adopts either, and
+    * [[vacuum]] reclaims both age-gated. The racing COMMITS serialize
+    * on the log's CREATE_NEW as always. */
   private[ingest] def writeStaged(root: String, prefix: String, data: DataFrame,
                                   partitionCols: Seq[String] = Seq.empty,
                                   subDir: String = "",
@@ -3048,25 +2725,45 @@ object Snapshots {
     out
   }
 
+  /** INSERT OVERWRITE (full-table replace, copy-on-write): `data`
+    * becomes the table's ENTIRE content in one commit. New files land
+    * beside the old bytes (append-mode write, then rename-marked so a
+    * racing plain [[commit]] can never adopt them as an append); one
+    * "overwrite" version then pins exactly the new set and records
+    * every previous file as removed. Old versions stay readable —
+    * time travel and [[restore]] work across an overwrite — and
+    * [[vacuum]] reclaims the replaced bytes later. Deletion vectors
+    * die with the files they pointed at (the new snapshot carries
+    * none). Fresh footer stats are assembled for the new files only,
+    * so the manifest metadata paths (COUNT(*) / MIN / MAX / LIMIT
+    * prefix / range pruning) are live immediately after the replace.
+    *
+    * Change feed: the replaced rows ride as row-grain "delete"
+    * pre-images and the new rows as "insert"s — the same contract
+    * [[delete]] and [[merge]] keep, so a replica applying the feed
+    * converges. Both images are read back from committed bytes (the
+    * old snapshot's files, the newly written files), never from
+    * re-evaluating `data`'s plan.
+    *
+    * Concurrency: overwrite REPLACES the state at commit time,
+    * recomputed per retry — a commit that lands mid-overwrite is
+    * replaced too (Delta's serializable overwrite answer), never
+    * resurrected next to the new content. Idempotent per `txn`.
+    * At 100 TB: the write cost is the new data (unavoidable — that IS
+    * the operation); the replace itself is one manifest commit. */
   def overwrite(spark: SparkSession, root: String, prefix: String,
                 data: DataFrame, txn: Option[String] = None): Int = {
     val snap0 = snapshot(root, prefix, None)
-    if (snap0.isEmpty) {
-      // REPLACE TABLE AS SELECT / INSERT OVERWRITE on a freshly
-      // CREATEd, never-committed table: nothing to remove, so the
-      // overwrite IS the first append (commitFiles dedups txn replays)
-      enforceConstraints(root, prefix, data)
-      val added = writeStaged(root, prefix, data,
-        if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
-      return commitFiles(root, prefix, added, maxPos = None, txn = txn)
-    }
+    // REPLACE TABLE AS SELECT / INSERT OVERWRITE on a freshly CREATEd,
+    // never-committed table: nothing to remove, so the overwrite IS
+    // the first append
+    if (snap0.isEmpty) return appendBatch(spark, root, prefix, data, txn, topicCols(data))
     val snap = snap0.get
     if (txn.exists(snap.txns.contains)) snap.version
     else {
       enforceConstraints(root, prefix, data)
       val base = dataDir(root, prefix)
-      val added = writeStaged(root, prefix, data,
-        if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
+      val added = writeStaged(root, prefix, data, topicCols(data))
       val evs = schemaEvents(root, prefix, Some(snap.version))
       val cdc = readFilesFilled(spark, root, prefix, snap.files, evs, snap.dv)
         .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
@@ -3074,20 +2771,13 @@ object Snapshots {
           readFilesFilled(spark, root, prefix, added, evs)
             .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")))
       writeCdc(root, prefix, cdc) {
-        var attempts = 5
-        var committed = -1
-        while (committed < 0) {
+        commitLoop {
           val cur = snapshot(root, prefix, None).get
-          try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
+          writeSnapshot(root, prefix, nextVersion(root, prefix),
             cur.maxPos max snap.maxPos, added, cur.files.sorted, "overwrite",
             cur.txns ++ txn, assembleStats(base, added, Seq.empty),
             parent = Some(cur))
-          catch {
-            case e: ConcurrentCommitException =>
-              attempts -= 1; if (attempts <= 0) throw e
-          }
         }
-        committed
       }
     }
   }
@@ -3125,26 +2815,20 @@ object Snapshots {
                                   maxPos: Option[Long] = None,
                                   txn: Option[String] = None): Int = {
     val base = dataDir(root, prefix)
-    var attempts = 5
-    var committed = -1
-    while (committed < 0) {
+    commitLoop {
       val cur = snapshot(root, prefix, None)
       // a racing first delivery of the SAME txn may have landed while
       // we wrote — re-check, orphaning our copy (vacuum's problem)
-      if (txn.exists(t => cur.exists(_.txns.contains(t))))
-        return cur.get.version
-      val files = (cur.map(_.files).getOrElse(Seq.empty) ++ added).sorted
-      try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-        maxPos.getOrElse(cur.map(_.maxPos).getOrElse(-1L)), files, Seq.empty,
-        "append", cur.map(_.txns).getOrElse(Seq.empty) ++ txn,
-        assembleStats(base, files, cur.map(_.stats).getOrElse(Seq.empty)),
-        extraFields = dvField(cur.map(_.dv).getOrElse(Seq.empty)), parent = cur)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts -= 1; if (attempts <= 0) throw e
+      if (txn.exists(t => cur.exists(_.txns.contains(t)))) cur.get.version
+      else {
+        val files = (cur.map(_.files).getOrElse(Seq.empty) ++ added).sorted
+        writeSnapshot(root, prefix, nextVersion(root, prefix),
+          maxPos.getOrElse(cur.map(_.maxPos).getOrElse(-1L)), files, Seq.empty,
+          "append", cur.map(_.txns).getOrElse(Seq.empty) ++ txn,
+          assembleStats(base, files, cur.map(_.stats).getOrElse(Seq.empty)),
+          extraFields = dvField(cur.map(_.dv).getOrElse(Seq.empty)), parent = cur)
       }
     }
-    committed
   }
 
   /** replaceWhere (PARTIAL overwrite — Delta's `option("replaceWhere",
@@ -3168,80 +2852,30 @@ object Snapshots {
   def overwriteWhere(spark: SparkSession, root: String, prefix: String,
                      predicate: org.apache.spark.sql.Column, data: DataFrame,
                      txn: Option[String] = None): Int = {
-    val snap0 = snapshot(root, prefix, None)
-    if (snap0.isEmpty) {
-      // replaceWhere into a never-committed table: the region is empty,
-      // so only the row-containment contract needs enforcing before
-      // the write lands as the first append
-      val m0 = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
-      require(data.filter(!m0).isEmpty,
-        "replaceWhere: every incoming row must satisfy the predicate — " +
-          "rows outside the replaced region would silently survive the next replace")
-      enforceConstraints(root, prefix, data)
-      val added = writeStaged(root, prefix, data,
-        if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
-      return commitFiles(root, prefix, added, maxPos = None, txn = txn)
+    val matches = RowRewrite.matching(predicate)
+    def contained(): Unit = require(data.filter(!matches).isEmpty,
+      "replaceWhere: every incoming row must satisfy the predicate — " +
+        "rows outside the replaced region would silently survive the next replace")
+    // replaceWhere into a never-committed table: the region is empty,
+    // so only the row-containment contract needs enforcing before the
+    // write lands as the first append
+    if (snapshot(root, prefix, None).isEmpty) labeled(spark, s"replacewhere $prefix") {
+      contained(); appendBatch(spark, root, prefix, data, txn, topicCols(data))
     }
-    val snap = snap0.get
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
-      require(data.filter(!matches).isEmpty,
-        "replaceWhere: every incoming row must satisfy the predicate — " +
-          "rows outside the replaced region would silently survive the next replace")
-      enforceConstraints(root, prefix, data)
-      val base = dataDir(root, prefix)
-      val added = writeStaged(root, prefix, data,
-        if (data.columns.contains("topic")) Seq("topic") else Seq.empty)
+    else RowRewrite.dml(spark, root, prefix, "replacewhere", txn) { snap =>
+      contained()
       val evs = schemaEvents(root, prefix, Some(snap.version))
-      // the matched set is what a region replace is FOR — small next
-      // to the table; one materialization feeds sidecar + conflict
-      // check + CDC pre-images (the deleteMoR discipline)
-      val hits = readFilesFilled(spark, root, prefix, snap.files, evs,
-        snap.dv, keepPositions = true)
-        .filter(matches).localCheckpoint(true)
-      val relOffset = base.toString.length + 2 // past base and its '/'
-      val dvName =
-        if (hits.isEmpty) None
-        else Some("dv-" + java.util.UUID.randomUUID().toString.take(8))
-      dvName.foreach { name =>
-        hits.select(
-          org.apache.spark.sql.functions.expr(
-            s"substring($DvPathCol, $relOffset)").as("file"),
-          col(DvPosCol).as("pos"))
-          .coalesce(1)
-          .write.parquet(dvDir(root, prefix).resolve(name).toString)
-      }
-      val touched: Set[String] =
-        if (dvName.isEmpty) Set.empty
-        else hits.select(DvPathCol).distinct()
-          .collect().map(_.getString(0).substring(relOffset - 1)).toSet
-      val cdc = hits.drop(DvPathCol, DvPosCol)
-        .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
-        .unionByName(
-          readFilesFilled(spark, root, prefix, added, evs)
-            .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")))
-      writeCdc(root, prefix, cdc) {
-        var attempts = 5
-        var committed = -1
-        while (committed < 0) {
-          val cur = snapshot(root, prefix, None).get
-          val claimed = touched -- cur.files.toSet
-          if (claimed.nonEmpty)
-            throw new RewriteConflictException("replacewhere", claimed.toSeq.sorted)
-          val files = (cur.files ++ added).sorted
-          try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-            cur.maxPos max snap.maxPos, files, Seq.empty, "replacewhere",
-            cur.txns ++ txn, assembleStats(base, files, cur.stats),
-            extraFields = dvField(cur.dv ++ dvName), parent = Some(cur))
-          catch {
-            case e: ConcurrentCommitException =>
-              attempts -= 1; if (attempts <= 0) throw e
-          }
-        }
-        committed
+      // the pass keeps only the replaced rows — what a region replace
+      // is FOR, small next to the table: their positions become the
+      // sidecar, their pre-images the "delete" records
+      RowRewrite.rewrite(spark, root, prefix, "replacewhere", snap, txn, Seq.empty)(
+        _.filter(matches).withColumn(RowRewrite.Hit, lit(true))) { hits =>
+        def inserts(added: Seq[String]) = readFilesFilled(spark, root, prefix, added, evs)
+          .withColumn("_change_type", lit("insert"))
+        Some(RowRewrite.Output(Some(data),
+          added => hits.fold(inserts(added))(_.image(lit(true))
+            .withColumn("_change_type", lit("delete")).unionByName(inserts(added))),
+          checked = Some(data), dv = hits.map(_.positions)))
       }
     }
   }
@@ -3274,69 +2908,18 @@ object Snapshots {
   def deleteMoR(spark: SparkSession, root: String, prefix: String,
                 predicate: org.apache.spark.sql.Column,
                 txn: Option[String] = None,
-                ranges: Seq[StatRange] = Seq.empty): Int = {
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to delete from for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      val base = dataDir(root, prefix)
-      // same null rule as DELETE: predicate NULL keeps the row
-      val matches = org.apache.spark.sql.functions.coalesce(
-        predicate, org.apache.spark.sql.functions.lit(false))
-      val evs = schemaEvents(root, prefix, Some(snap.version))
-      val candidates =
-        if (ranges.isEmpty) snap.files
-        else pruneFilesMulti(root, prefix, ranges, Some(snap.version))
-      if (candidates.isEmpty) return snap.version // stats exclude every file
-      // one materialization reused three ways: sidecar rows, touched
-      // files for the conflict check, CDC pre-images. The hit set is
-      // what a MoR delete is FOR — small next to the table.
-      val hits = labeled(spark, "delete attribution")(
-        readFilesFilled(spark, root, prefix, candidates, evs,
-          snap.dv, keepPositions = true)
-          .filter(matches).localCheckpoint(true))
-      if (hits.isEmpty) snap.version // nothing matched — no new version
-      else {
-        val relOffset = base.toString.length + 2 // past base and its '/'
-        val name = "dv-" + java.util.UUID.randomUUID().toString.take(8)
-        labeled(spark, "dv sidecar write")(hits.select(
-          org.apache.spark.sql.functions.expr(
-            s"substring($DvPathCol, $relOffset)").as("file"),
-          col(DvPosCol).as("pos"))
-          // a sidecar is kilobytes-per-commit metadata: one file keeps
-          // the read path's broadcast build cheap
-          .coalesce(1)
-          .write.parquet(dvDir(root, prefix).resolve(name).toString))
-        val touched = distinctCollected(hits, DvPathCol)
-          .map(_.substring(relOffset - 1)).toSet
-        val cdc = hits.drop(DvPathCol, DvPosCol)
-          .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete"))
-        writeCdc(root, prefix, cdc) {
-          var attempts = 5
-          var committed = -1
-          while (committed < 0) {
-            val cur = snapshot(root, prefix, None).get
-            // positions were computed against these files: a rewrite
-            // that claimed any of them relocated the rows, and this
-            // sidecar would silently miss them — abort, like any
-            // rewrite-rewrite race
-            val claimed = touched -- cur.files.toSet
-            if (claimed.nonEmpty)
-              throw new RewriteConflictException("deletemor", claimed.toSeq.sorted)
-            try committed = writeSnapshot(root, prefix, nextVersion(root, prefix),
-              cur.maxPos, cur.files, Seq.empty, "deletemor",
-              cur.txns ++ txn, cur.stats,
-              extraFields = dvField(cur.dv :+ name), parent = Some(cur))
-            catch {
-              case e: ConcurrentCommitException =>
-                attempts -= 1; if (attempts <= 0) throw e
-            }
-          }
-          committed
-        }
+                ranges: Seq[StatRange] = Seq.empty): Int =
+    RowRewrite.dml(spark, root, prefix, "deletemor", txn) { snap =>
+      // the pass keeps only the hit rows: their positions become the
+      // sidecar, their pre-images the "delete" records — the hit set is
+      // what a MoR delete is FOR, small next to the table
+      RowRewrite.rewrite(spark, root, prefix, "deletemor", snap, txn, ranges)(
+        _.filter(RowRewrite.matching(predicate)).withColumn(RowRewrite.Hit, lit(true))) {
+        _.map(h => RowRewrite.Output(None,
+          _ => h.image(lit(true)).withColumn("_change_type", lit("delete")),
+          dv = Some(h.positions)))
       }
     }
-  }
 
   /** Apply a change-feed increment to a replica table in ONE
     * copy-on-write pass (the q187 single-pass rule, incremental): the
@@ -3349,70 +2932,35 @@ object Snapshots {
                        feed: DataFrame, keys: Seq[String],
                        txn: Option[String] = None): Int = {
     require(keys.nonEmpty, "applyChangeBatch needs at least one key column")
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to apply into for $prefix"))
-    if (txn.exists(snap.txns.contains)) snap.version
-    else {
-      val base = dataDir(root, prefix)
+    RowRewrite.dml(spark, root, prefix, "apply", txn) { snap =>
       val isUpsert = col("_change_type").isin("insert", "update_postimage")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keys.map(col): _*)
         .orderBy(col("_commit_version").desc, isUpsert.cast("int").desc)
-      val last = feed
-        .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("_rn") === 1)
-        .localCheckpoint(true) // reused by keys + upserts below
-      if (last.isEmpty) snap.version // empty increment — no new version
+      // one row per key — reused by the key set, the upserts and the
+      // change records; its size and lead-key range ride the same job
+      val (last, n, ranges) = RowRewrite.materialize(spark, s"apply last change $prefix",
+        feed.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
+          .filter(col("_rn") === 1), Seq(keys.head -> keys.head))
+      if (n == 0) snap.version // empty increment — no new version
       else {
         val tableCols = read(spark, root, prefix, Some(snap.version)).columns.toSeq
-        val changedKeys = last.select(keys.map(col): _*).distinct()
-          .localCheckpoint(true)
         val upserts = last.filter(isUpsert).select(tableCols.map(col): _*)
-        // manifest pruning + exact attribution, the merge() two-stage
+        // manifest pruning + the pass's membership test, the merge()
         // file location: only files holding a changed key are rewritten
-        val candidates = snap.stats.find(s => s.column == keys.head && s.typ == "L") match {
-          case Some(_) =>
-            val mm = changedKeys.agg(
-              org.apache.spark.sql.functions.min(keys.head),
-              org.apache.spark.sql.functions.max(keys.head)).head()
-            if (mm.isNullAt(0)) Seq.empty
-            else pruneFiles(root, prefix, keys.head, mm.getLong(0), mm.getLong(1), Some(snap.version))
-          case None => snap.files
-        }
-        val matchedFiles: Seq[String] =
-          if (candidates.isEmpty) Seq.empty
-          else {
-            val withFile = readFilesFilled(spark, root, prefix, candidates,
-              schemaEvents(root, prefix, Some(snap.version)), snap.dv,
-              keepPositions = true)
-            labeled(spark, "apply attribution")(
-              distinctCollected(withFile.join(changedKeys, keys, "left_semi"), DvPathCol))
-              .map(uri => snap.files.find(f => uri.endsWith(f)).getOrElse(
-                sys.error(s"unattributable file $uri")))
-              .sorted
-          }
-        val oldMatched =
-          if (matchedFiles.isEmpty) upserts.limit(0)
-          else readFilesFilled(spark, root, prefix, matchedFiles,
-            schemaEvents(root, prefix, Some(snap.version)))
-        // using-join reorders (keys first) — restore the logical order,
-        // same reasoning as merge()
-        val survivors = oldMatched.join(changedKeys, keys, "left_anti")
-          .select(oldMatched.columns.map(col): _*)
-        val out = survivors.unionByName(upserts)
-        val added = writeStaged(root, prefix, out,
-          if (out.columns.contains("topic")) Seq("topic") else Seq.empty)
-        // row-grain CDC for the replica rides the feed increment itself
-        // (change types preserved — a downstream replica can chain).
-        // NET grain: only each key's last change is re-staged, so
-        // source update pre-images are not forwarded (a second-level
-        // incremental aggregate would need the REPLICA's own old rows
-        // as pre-images, not the source's intermediate ones — diff
-        // time-travel reads of the replica for that)
-        writeCdc(root, prefix,
-          last.drop("_rn", "_commit_version", "_commit_timestamp")) {
-          commitRewrite(root, prefix, "merge", matchedFiles.toSet, added,
-            matchedFiles, snap.maxPos, txn)
+        RowRewrite.rewrite(spark, root, prefix, "merge", snap, txn, ranges)(
+          RowRewrite.member(_, last.select(keys.map(col): _*), keys)) { hits =>
+          Some(RowRewrite.Output(
+            Some(hits.fold(upserts)(_.image(!col(RowRewrite.Hit)).unionByName(upserts))),
+            // row-grain CDC for the replica rides the feed increment
+            // itself (change types preserved — a downstream replica can
+            // chain). NET grain: only each key's last change is
+            // re-staged, so source update pre-images are not forwarded
+            // (a second-level incremental aggregate would need the
+            // REPLICA's own old rows as pre-images, not the source's
+            // intermediate ones — diff time-travel reads of the replica
+            // for that)
+            _ => last.drop("_rn", "_commit_version", "_commit_timestamp")))
         }
       }
     }
@@ -3476,25 +3024,6 @@ object Snapshots {
       }
       .start()
 
-  /** OPTIMIZE-style clustering rewrite: re-layout the latest snapshot
-    * range-partitioned by `column` into ~`targetFiles` files, each
-    * covering a narrow disjoint value range — the rewrite that turns
-    * manifest stats pruning from "skips nothing on a hash-shuffled
-    * table" into "opens only the overlapping files". Rows are
-    * unchanged, so it commits as a compaction (time travel preserved,
-    * incremental readers skip it). */
-  def cluster(spark: SparkSession, root: String, prefix: String,
-              column: String, targetFiles: Int = 8): Int = {
-    val snap = snapshot(root, prefix, None).getOrElse(
-      sys.error(s"nothing to cluster for $prefix"))
-    val df = read(spark, root, prefix, Some(snap.version))
-      .repartitionByRange(targetFiles, col(column))
-    val added = writeStaged(root, prefix, df,
-      if (df.columns.contains("topic")) Seq("topic") else Seq.empty)
-    commitRewrite(root, prefix, "compact", snap.files.toSet, added,
-      snap.files, snap.maxPos, txn = None)
-  }
-
   /** Equi-depth split points for one column, metadata-scale on the
     * driver: numeric columns use approxQuantile (no row collection at
     * all); other orderable types reservoir-sample a bounded set of
@@ -3556,8 +3085,7 @@ object Snapshots {
     val out = df.withColumn("_graft_z", zKey)
       .repartitionByRange(targetFiles, col("_graft_z"))
       .drop("_graft_z")
-    val added = writeStaged(root, prefix, out,
-      if (out.columns.contains("topic")) Seq("topic") else Seq.empty)
+    val added = writeStaged(root, prefix, out, topicCols(out))
     commitRewrite(root, prefix, "compact", snap.files.toSet, added,
       snap.files, snap.maxPos, txn = None)
   }

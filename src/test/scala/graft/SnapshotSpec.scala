@@ -701,30 +701,6 @@ class SnapshotSpec extends SparkTestBase {
     assert(Snapshots.read(spark, root, "s17").count() == 900)
   }
 
-  test("clustering rewrite tightens file stats and sharpens pruning") {
-    val root = Files.createTempDirectory("graft_snap").toString
-    // worst layout: round-robin shuffled writes put the full ba range
-    // in every file, so range pruning can skip nothing
-    ProduceJob.personProjection(spark.range(4000).toDF("cnt"), "cnt", "s16", 1)
-      .repartition(8)
-      .write.mode("append").partitionBy("topic")
-      .parquet(graft.ingest.Topics.tableDir(root, "s16"))
-    Snapshots.commit(root, "s16", 3999)
-    val all = Snapshots.snapshot(root, "s16").get.files
-    assert(Snapshots.pruneFiles(root, "s16", "ba", 0, 99).size == all.size)
-    val v = Snapshots.cluster(spark, root, "s16", "ba", targetFiles = 8)
-    assert(Snapshots.snapshot(root, "s16").get.version == v)
-    // post-cluster: a narrow range read opens a fraction of the files
-    val pruned = Snapshots.pruneFiles(root, "s16", "ba", 0, 99)
-    assert(pruned.size < Snapshots.snapshot(root, "s16").get.files.size / 2)
-    // rows unchanged, pruned read exact, time travel intact
-    val t = Snapshots.read(spark, root, "s16")
-    assert(t.count() == 4000)
-    assert(t.agg(sum("ba")).head().getLong(0) == (0L until 4000L).sum)
-    assert(Snapshots.readPruned(spark, root, "s16", "ba", 0, 99).count() == 100)
-    assert(Snapshots.read(spark, root, "s16", Some(v - 1)).count() == 4000)
-  }
-
   test("CHECK constraints refuse violating merges atomically") {
     val root = Files.createTempDirectory("graft_snap").toString
     ProduceJob.produceBatch(spark, root, "s18", topics = 1, numMessages = 100)
@@ -1277,19 +1253,52 @@ class SnapshotSpec extends SparkTestBase {
   }
 
   test("updateWhere fused and recompute paths commit identical tables and change feeds") {
-    // r15: small UPDATEs evaluate predicate + SET values in ONE
-    // materialized pass (spark.graft.dml.fuseMaxBytes gate); large
-    // rewrites keep the recompute shape. Both must produce the same
-    // committed rows AND the same row-grain change feed.
-    def build(fuseMax: String): (Seq[String], Seq[String]) = {
+    // every row-level op runs one pass over its candidate files,
+    // materialized under the spark.graft.dml.fuseMaxBytes gate and
+    // left lazy above it. Both shapes must commit the same rows AND
+    // the same row-grain change feed, for every op.
+    def upd(p: String, lo: Long, hi: Long) =
+      ProduceJob.personProjection(spark.range(lo, hi).toDF("cnt"), "cnt", p, 1)
+        .withColumn("name", concat(lit("m"), col("ba")))
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "update" -> { root =>
+        Snapshots.updateWhere(spark, root, "u", col("ba") % 3 === 0 && col("ba") < 100,
+          Seq("name" -> concat(lit("u"), col("ba")), "age" -> (col("age") + 1))); ()
+      },
+      "delete" -> { root =>
+        Snapshots.delete(spark, root, "u", col("ba") % 3 === 0 && col("ba") < 100); ()
+      },
+      "merge" -> { root =>
+        Snapshots.merge(spark, root, "u", upd("u", 150, 260), Seq("ba")); ()
+      },
+      "mergeInto" -> { root =>
+        val s = upd("u", 150, 260)
+        val src = s.select(s.columns.map(c => col(c).as(Snapshots.SrcColPrefix + c)): _*)
+        val schema = Snapshots.tableSchema(spark, root, "u")
+        val assign = schema.fieldNames.toSeq.map(c => c -> (Snapshots.SrcColPrefix + c))
+        Snapshots.mergeInto(spark, root, "u", src, s"ba = ${Snapshots.SrcColPrefix}ba",
+          matched = Seq(Snapshots.MergeClause(Some(s"${Snapshots.SrcColPrefix}ba % 2 = 0"), None),
+            Snapshots.MergeClause(None, Some(assign))),
+          notMatched = Seq(Snapshots.MergeClause(None, Some(assign))),
+          notMatchedBySource = Seq.empty, schema,
+          equiKeys = Seq("ba" -> s"${Snapshots.SrcColPrefix}ba")); ()
+      },
+      "applyChangeBatch" -> { root =>
+        // the replica "u" applies a source window holding an upsert
+        // and a delete
+        ProduceJob.produceBatch(spark, root, "cs", topics = 1, numMessages = 200)
+        Snapshots.merge(spark, root, "cs", upd("cs", 150, 260), Seq("ba"))
+        Snapshots.delete(spark, root, "cs", col("ba") % 7 === 0)
+        val feed = Snapshots.readChangeFeed(spark, root, "cs", fromVersion = 0)
+        Snapshots.applyChangeBatch(spark, root, "u", feed, Seq("ba")); ()
+      })
+    def build(fuseMax: String, op: String => Unit): (Seq[String], Seq[String]) = {
       val root = Files.createTempDirectory("graft_updpath").toString
       ProduceJob.produceBatch(spark, root, "u", topics = 1, numMessages = 200)
       val k = "spark.graft.dml.fuseMaxBytes"
       val prior = spark.conf.getOption(k)
       spark.conf.set(k, fuseMax)
-      try Snapshots.updateWhere(spark, root, "u",
-        col("ba") % 3 === 0 && col("ba") < 100,
-        Seq("name" -> concat(lit("u"), col("ba")), "age" -> (col("age") + 1)))
+      try op(root)
       finally prior match {
         case Some(v) => spark.conf.set(k, v)
         case None => spark.conf.unset(k)
@@ -1302,12 +1311,72 @@ class SnapshotSpec extends SparkTestBase {
         .collect().toSeq.map(_.toString)
       (rows, feed)
     }
-    val (fusedRows, fusedFeed) = build(Long.MaxValue.toString)
-    val (recomputeRows, recomputeFeed) = build("0")
-    assert(fusedRows == recomputeRows)
-    assert(fusedFeed == recomputeFeed)
-    // the fused path must have actually updated something
-    assert(fusedFeed.exists(_.contains("update_postimage")))
+    ops.foreach { case (name, op) =>
+      val (fusedRows, fusedFeed) = build(Long.MaxValue.toString, op)
+      val (recomputeRows, recomputeFeed) = build("0", op)
+      assert(fusedRows == recomputeRows, s"$name: committed rows differ")
+      assert(fusedFeed == recomputeFeed, s"$name: change feeds differ")
+      // the op must have actually changed something past the v0 inserts
+      assert(fusedFeed.exists(r => r.contains("update_postimage") || r.contains("delete")),
+        s"$name changed nothing")
+    }
+  }
+
+  test("keyed merge attributes through deletion vectors: a key removed by deleteMoR rewrites no file") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    ProduceJob.produceBatch(spark, root, "mdv", topics = 1, numMessages = 100) // v0
+    Snapshots.deleteMoR(spark, root, "mdv", col("ba") === 42) // v1
+    val src = ProduceJob.personProjection(spark.range(42, 43).toDF("cnt"), "cnt", "mdv", 1)
+      .withColumn("name", lit("back"))
+    val v = Snapshots.merge(spark, root, "mdv", src, Seq("ba"))
+    // the only row holding key 42 is already deleted: nothing matched,
+    // so no file is rewritten and the source row lands as an insert
+    assert(Snapshots.snapshot(root, "mdv", Some(v)).get.removed.isEmpty)
+    val t = Snapshots.read(spark, root, "mdv")
+    assert(t.filter(col("ba") === 42).select("name").collect().map(_.getString(0)).toSeq ==
+      Seq("back"))
+    assert(t.count() == 100)
+    val feed = Snapshots.readChangeFeed(spark, root, "mdv", fromVersion = 1)
+    assert(feed.select("_change_type").collect().map(_.getString(0)).toSeq == Seq("insert"))
+  }
+
+  test("every Spark job a row-level DML op issues carries a graft: description") {
+    val root = Files.createTempDirectory("graft_dmljobs").toString
+    def upd(p: String, lo: Long, hi: Long) =
+      ProduceJob.personProjection(spark.range(lo, hi).toDF("cnt"), "cnt", p, 1)
+        .withColumn("name", lit("upd"))
+    Seq("jd", "ju", "jm", "jmi", "jow", "jdm", "jr", "js").foreach(p =>
+      ProduceJob.produceBatch(spark, root, p, topics = 1, numMessages = 200))
+    Snapshots.merge(spark, root, "js", upd("js", 150, 260), Seq("ba"))
+    Snapshots.delete(spark, root, "js", col("ba") % 7 === 0)
+    // built outside the traced calls: these frames plan reads of their own
+    val feed = Snapshots.readChangeFeed(spark, root, "js", fromVersion = 0)
+    val mi = upd("jmi", 150, 260)
+    val miSrc = mi.select(mi.columns.map(c => col(c).as(Snapshots.SrcColPrefix + c)): _*)
+    val miSchema = Snapshots.tableSchema(spark, root, "jmi")
+    val assign = miSchema.fieldNames.toSeq.map(c => c -> (Snapshots.SrcColPrefix + c))
+    val ops: Seq[(String, () => Int)] = Seq(
+      "delete" -> (() => Snapshots.delete(spark, root, "jd", col("ba") < 20)),
+      "updateWhere" -> (() => Snapshots.updateWhere(spark, root, "ju", col("ba") < 20,
+        Seq("age" -> (col("age") + 1)))),
+      "merge" -> (() => Snapshots.merge(spark, root, "jm", upd("jm", 150, 260), Seq("ba"))),
+      "mergeInto" -> (() => Snapshots.mergeInto(spark, root, "jmi", miSrc,
+        s"ba = ${Snapshots.SrcColPrefix}ba",
+        Seq(Snapshots.MergeClause(None, Some(assign))),
+        Seq(Snapshots.MergeClause(None, Some(assign))), Seq.empty, miSchema,
+        equiKeys = Seq("ba" -> s"${Snapshots.SrcColPrefix}ba"))),
+      "overwriteWhere" -> (() => Snapshots.overwriteWhere(spark, root, "jow",
+        col("ba") < 50, upd("jow", 0, 50))),
+      "deleteMoR" -> (() => Snapshots.deleteMoR(spark, root, "jdm", col("ba") < 20)),
+      "applyChangeBatch" -> (() => Snapshots.applyChangeBatch(spark, root, "jr", feed,
+        Seq("ba"))))
+    val unlabeled = ops.flatMap { case (name, op) =>
+      val (v, jobs) = jobsDuring(op())
+      info(s"$name: ${jobs.size} jobs")
+      assert(v == 1, s"$name committed no new version")
+      jobs.filterNot(_.startsWith("graft:")).map(d => s"$name: $d")
+    }
+    assert(unlabeled.isEmpty, s"unlabeled DML jobs: ${unlabeled.mkString("; ")}")
   }
 
   test("sizedForWrite bounds the shrink under row-exploding projections") {
