@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, expr, lit, max, min, when}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, expr, lit, max, min, when}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import Snapshots.{DvPathCol, DvPosCol, Snapshot, StatRange}
@@ -18,7 +18,8 @@ import Snapshots.{DvPathCol, DvPosCol, Snapshot, StatRange}
   *     candidates with row positions, on which the op computes its
   *     [[Hit]] verdict and any post-image columns beside the pre-image.
   *     The hit files are observed on the same job, and the pass is
-  *     materialized when it fits the [[fits]] gate;
+  *     materialized when it fits the [[fits]] gate or holds only hit
+  *     rows;
   *  3. attribute: hit-file URIs map back to table-relative paths;
   *  4. write: the rewrite output, the constraint input, the change
   *     records and any deletion-vector rows are selections over the
@@ -74,11 +75,15 @@ private[ingest] object RowRewrite {
     }
 
   /** Steps 1–5 for an op whose verdict is row-local. `mark` adds [[Hit]]
-    * (and any post-image columns) to the target read, and may drop rows
-    * no output needs; `output` turns the hits (None: no row hit) into
-    * what to commit (None: commit nothing, keep the current version). */
+    * (and any post-image columns) to the target read; `output` turns the
+    * hits (None: no row hit) into what to commit (None: commit nothing,
+    * keep the current version). `hitsOnly`: `mark` keeps only the hit
+    * rows, so the pass is hit-scale whatever the target's size and is
+    * materialized past the [[fits]] gate — one scan of the candidates
+    * serves attribution, positions and change records. */
   def rewrite(spark: SparkSession, root: String, prefix: String, op: String,
-              snap: Snapshot, txn: Option[String], ranges: Seq[StatRange])(
+              snap: Snapshot, txn: Option[String], ranges: Seq[StatRange],
+              hitsOnly: Boolean = false)(
       mark: DataFrame => DataFrame)(output: Option[Hits] => Option[Output]): Int = {
     val events = Snapshots.schemaEvents(root, prefix, Some(snap.version))
     val files =
@@ -94,7 +99,7 @@ private[ingest] object RowRewrite {
       // pass stays lazy and one collect attributes the hits.
       val observed = marked.observe("graft_hits", collect_set(when(col(Hit), col(DvPathCol))))
       val (frame, uris) =
-        if (fits(target)) {
+        if (hitsOnly || fits(target)) {
           val m = Snapshots.labeled(spark, s"$op pass $prefix")(observed.localCheckpoint(true))
           (m, observed.queryExecution.observedMetrics.get("graft_hits")
             .map(_.getSeq[String](0)).filter(_.nonEmpty).getOrElse(hitUris(spark, op, m)))
@@ -128,20 +133,11 @@ private[ingest] object RowRewrite {
     uris.map(u => byUri.getOrElse(u, sys.error(s"unattributable file $u"))).sorted
   }
 
-  /** Up to this many hit files the file set rides the plan as a
-    * hash-set filter, which costs no job; a broadcast of even a local
-    * relation runs one. */
-  private val InSetFiles = 1024
-
   /** Rows of `df` (a pass, or a target read) whose file is one of
-    * `uris`. Beyond [[InSetFiles]] files a literal per file would ship
-    * inside every task, so a broadcast semi join ships the set once. */
+    * `uris`: the optimizer turns the literal list into a hash-set
+    * filter, which costs no job. */
   def within(df: DataFrame, uris: Seq[String]): DataFrame =
-    if (uris.size <= InSetFiles) df.filter(col(DvPathCol).isInCollection(uris))
-    else {
-      val set = df.sparkSession.createDataFrame(uris.map(Tuple1(_))).toDF("_graft_uri")
-      df.join(broadcast(set), df(DvPathCol) === set("_graft_uri"), "left_semi")
-    }
+    df.filter(col(DvPathCol).isInCollection(uris))
 
   /** The `spark.graft.dml.fuseMaxBytes` gate (default 2 GiB): whether
     * the target read `df` is, by the optimizer's estimate, small enough

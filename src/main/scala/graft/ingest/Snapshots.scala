@@ -640,13 +640,13 @@ object Snapshots {
     * it; losing the CREATE_NEW race to a concurrent writer
     * ([[ConcurrentCommitException]]) re-runs it against the new head,
     * up to 6 attempts in all, then the exception surfaces. */
-  private[ingest] def commitLoop(attempt: => Int): Int = {
+  private[ingest] def commitLoop[T](attempt: => T): T = {
     var left = 6
-    var committed = -1
-    while (committed < 0)
-      try committed = attempt
+    var committed = Option.empty[T]
+    while (committed.isEmpty)
+      try committed = Some(attempt)
       catch { case _: ConcurrentCommitException if left > 1 => left -= 1 }
-    committed
+    committed.get
   }
 
   /** Commit the table's current state as the next version. Append
@@ -1998,20 +1998,23 @@ object Snapshots {
     * can't collide; the rename happens AFTER the snapshot commit, so a
     * crash in between degrades that one version to file-grain change
     * attribution (readChangeFeed's documented fallback) — it can never
-    * misattribute rows. A commit that finds its transaction already
-    * landed returns that version: its records stand and ours drop. */
-  private[ingest] def writeCdc(root: String, prefix: String,
-                               changes: DataFrame)(commit: => Int): Int = {
+    * misattribute rows. `commit` returns Right(v) for the version it
+    * wrote, Left(head) when it wrote none (its transaction already
+    * landed): then the records belong to no version and drop.
+    * (private[graft]: a spec drives the already-landed case directly.) */
+  private[graft] def writeCdc(root: String, prefix: String,
+                              changes: DataFrame)(commit: => Either[Int, Int]): Int = {
     val staging = Paths.get(s"$root/$prefix._cdc")
       .resolve("staging-" + java.util.UUID.randomUUID().toString.take(8))
     labeled(changes.sparkSession, s"cdc write $prefix")(
       sizedForWrite(changes).write.mode("overwrite").parquet(staging.toString))
-    val v = commit
-    if (Files.exists(cdcDir(root, prefix, v)))
-      Using.resource(Files.walk(staging))(_.iterator().asScala.toSeq)
-        .reverse.foreach(Files.deleteIfExists)
-    else Files.move(staging, cdcDir(root, prefix, v))
-    v
+    commit match {
+      case Right(v) => Files.move(staging, cdcDir(root, prefix, v)); v
+      case Left(head) =>
+        Using.resource(Files.walk(staging))(_.iterator().asScala.toSeq)
+          .reverse.foreach(Files.deleteIfExists)
+        head
+    }
   }
 
   /** Row-grain change feed (Delta CDF-style): every row added, updated,
@@ -2205,7 +2208,7 @@ object Snapshots {
     val removed = superseded.result()
     if (removed.isEmpty) snap.version // nothing rewritten — no new version
     else commitRewrite(root, prefix, "compact", removed.toSet, keep.result(),
-      removed, snap.maxPos, txn = None)
+      removed, snap.maxPos, txn = None).merge
   }
 
   /** The commit of every rewriting op (compact, the row-level DML of
@@ -2219,19 +2222,21 @@ object Snapshots {
     * its version stands) and the claimed inputs: a concurrent REWRITE
     * that claimed a file this op replaces or marks is a real conflict —
     * the output was derived from pre-race contents or positions — and
-    * aborts instead of committing.
+    * aborts instead of committing. Returns Right(v) for the version
+    * this call committed, Left(head) when `txn` had already landed and
+    * it committed nothing — what [[writeCdc]] decides by.
     * (private[graft]: the conflict spec drives the stale-input case
     * directly — a live thread race can't be scheduled deterministically.) */
   private[graft] def commitRewrite(root: String, prefix: String, op: String,
-                            gone: Set[String], added: Seq[String],
-                            removed: Seq[String], maxPosFloor: Long,
-                            txn: Option[String],
-                            dv: Option[(String, Set[String])] = None): Int = {
+                                   gone: Set[String], added: Seq[String],
+                                   removed: Seq[String], maxPosFloor: Long,
+                                   txn: Option[String],
+                                   dv: Option[(String, Set[String])] = None): Either[Int, Int] = {
     val base = dataDir(root, prefix)
     val inputs = gone ++ dv.fold(Set.empty[String])(_._2)
     commitLoop {
       val cur = snapshot(root, prefix, None).get
-      if (txn.exists(cur.txns.contains)) cur.version
+      if (txn.exists(cur.txns.contains)) Left(cur.version)
       else {
         val claimed = inputs -- cur.files.toSet
         if (claimed.nonEmpty)
@@ -2240,10 +2245,10 @@ object Snapshots {
         // carry the dv set forward: entries for files leaving the set go
         // stale harmlessly (the path join can't match them again), while
         // entries for untouched files must keep deleting
-        writeSnapshot(root, prefix, nextVersion(root, prefix),
+        Right(writeSnapshot(root, prefix, nextVersion(root, prefix),
           cur.maxPos max maxPosFloor, files, removed, op,
           cur.txns ++ txn, assembleStats(base, files, cur.stats),
-          extraFields = dvField(cur.dv ++ dv.map(_._1)), parent = Some(cur))
+          extraFields = dvField(cur.dv ++ dv.map(_._1)), parent = Some(cur)))
       }
     }
   }
@@ -2771,13 +2776,13 @@ object Snapshots {
           readFilesFilled(spark, root, prefix, added, evs)
             .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert")))
       writeCdc(root, prefix, cdc) {
-        commitLoop {
+        Right(commitLoop {
           val cur = snapshot(root, prefix, None).get
           writeSnapshot(root, prefix, nextVersion(root, prefix),
             cur.maxPos max snap.maxPos, added, cur.files.sorted, "overwrite",
             cur.txns ++ txn, assembleStats(base, added, Seq.empty),
             parent = Some(cur))
-        }
+        })
       }
     }
   }
@@ -2868,8 +2873,8 @@ object Snapshots {
       // the pass keeps only the replaced rows — what a region replace
       // is FOR, small next to the table: their positions become the
       // sidecar, their pre-images the "delete" records
-      RowRewrite.rewrite(spark, root, prefix, "replacewhere", snap, txn, Seq.empty)(
-        _.filter(matches).withColumn(RowRewrite.Hit, lit(true))) { hits =>
+      RowRewrite.rewrite(spark, root, prefix, "replacewhere", snap, txn, Seq.empty,
+        hitsOnly = true)(_.filter(matches).withColumn(RowRewrite.Hit, lit(true))) { hits =>
         def inserts(added: Seq[String]) = readFilesFilled(spark, root, prefix, added, evs)
           .withColumn("_change_type", lit("insert"))
         Some(RowRewrite.Output(Some(data),
@@ -2913,7 +2918,8 @@ object Snapshots {
       // the pass keeps only the hit rows: their positions become the
       // sidecar, their pre-images the "delete" records — the hit set is
       // what a MoR delete is FOR, small next to the table
-      RowRewrite.rewrite(spark, root, prefix, "deletemor", snap, txn, ranges)(
+      RowRewrite.rewrite(spark, root, prefix, "deletemor", snap, txn, ranges,
+        hitsOnly = true)(
         _.filter(RowRewrite.matching(predicate)).withColumn(RowRewrite.Hit, lit(true))) {
         _.map(h => RowRewrite.Output(None,
           _ => h.image(lit(true)).withColumn("_change_type", lit("delete")),
@@ -3087,7 +3093,7 @@ object Snapshots {
       .drop("_graft_z")
     val added = writeStaged(root, prefix, out, topicCols(out))
     commitRewrite(root, prefix, "compact", snap.files.toSet, added,
-      snap.files, snap.maxPos, txn = None)
+      snap.files, snap.maxPos, txn = None).merge
   }
 
   /** Physically delete files that only versions older than `keepFrom`

@@ -766,8 +766,39 @@ class SnapshotSpec extends SparkTestBase {
     val other = snap.files.last
     val v = Snapshots.commitRewrite(root, "s20", "delete",
       gone = Set(other), added = Seq.empty,
-      removed = Seq(other), maxPosFloor = snap.maxPos, txn = None)
+      removed = Seq(other), maxPosFloor = snap.maxPos, txn = None).merge
     assert(v == snap.version + 2)
+  }
+
+  test("a rewrite whose transaction already landed drops its change records onto no version") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    ProduceJob.produceBatch(spark, root, "ct", topics = 1, numMessages = 100) // v0
+    // delivery 1 of transaction t1 commits v1 with its change records
+    val v1 = Snapshots.delete(spark, root, "ct", col("ba") < 10, txn = Some("t1"))
+    val gone = Snapshots.snapshot(root, "ct", Some(v1)).get.removed
+    // writers interleave before delivery 2's commit: an append (v2) and
+    // a schema change (v3, an op whose change feed would read records
+    // found in its change-record directory)
+    val extra = ProduceJob.personProjection(spark.range(500, 520).toDF("cnt"), "cnt", "ct", 1)
+    Snapshots.appendBatch(spark, root, "ct", extra)
+    val head = Snapshots.addColumn(root, "ct", "tier", "STRING", Some("'std'"))
+    // delivery 2 of t1 passed its prologue before v1 landed and staged
+    // its own records (driven via the primitives: a live race can't be
+    // scheduled deterministically); its commit finds t1 in the log
+    val stale = Snapshots.read(spark, root, "ct", Some(0)).filter(col("ba") < 10)
+      .withColumn("_change_type", lit("delete"))
+    val v = Snapshots.writeCdc(root, "ct", stale) {
+      Snapshots.commitRewrite(root, "ct", "delete", gone.toSet, Seq.empty, gone,
+        maxPosFloor = 0L, txn = Some("t1"))
+    }
+    assert(v == head && Snapshots.versions(root, "ct").max == head)
+    // the head's feed is its own: the append's inserts, no stale deletes
+    val feed = Snapshots.readChangeFeed(spark, root, "ct", fromVersion = v1)
+    assert(feed.filter(col("_change_type") =!= "insert").count() == 0)
+    assert(feed.count() == 20)
+    val cdc = java.nio.file.Paths.get(s"$root/ct._cdc")
+    assert(Files.list(cdc).iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
+      Seq(f"v$v1%05d"), "staged records moved or left behind")
   }
 
   test("vacuum keeps in-flight rewrite output inside the grace window") {
@@ -1291,14 +1322,24 @@ class SnapshotSpec extends SparkTestBase {
         Snapshots.delete(spark, root, "cs", col("ba") % 7 === 0)
         val feed = Snapshots.readChangeFeed(spark, root, "cs", fromVersion = 0)
         Snapshots.applyChangeBatch(spark, root, "u", feed, Seq("ba")); ()
+      },
+      "deleteMoR" -> { root =>
+        Snapshots.deleteMoR(spark, root, "u", col("ba") % 3 === 0 && col("ba") < 100); ()
+      },
+      "overwriteWhere" -> { root =>
+        Snapshots.overwriteWhere(spark, root, "u", col("ba") < 50, upd("u", 0, 50)); ()
       })
-    def build(fuseMax: String, op: String => Unit): (Seq[String], Seq[String]) = {
+    // merge-on-read passes hold only the hit rows: they are materialized
+    // past the gate, so both settings scan the candidate files equally
+    // often — once for the pass
+    val hitScale = Set("deleteMoR", "overwriteWhere")
+    def build(fuseMax: String, op: String => Unit): (Seq[String], Seq[String], Int) = {
       val root = Files.createTempDirectory("graft_updpath").toString
       ProduceJob.produceBatch(spark, root, "u", topics = 1, numMessages = 200)
       val k = "spark.graft.dml.fuseMaxBytes"
       val prior = spark.conf.getOption(k)
       spark.conf.set(k, fuseMax)
-      try op(root)
+      val scans = try fileScansDuring(op(root))._2
       finally prior match {
         case Some(v) => spark.conf.set(k, v)
         case None => spark.conf.unset(k)
@@ -1309,13 +1350,16 @@ class SnapshotSpec extends SparkTestBase {
         .drop("_commit_timestamp") // wall-clock differs between builds
         .orderBy(col("_commit_version"), col("_change_type"), col("ba"))
         .collect().toSeq.map(_.toString)
-      (rows, feed)
+      (rows, feed, scans)
     }
     ops.foreach { case (name, op) =>
-      val (fusedRows, fusedFeed) = build(Long.MaxValue.toString, op)
-      val (recomputeRows, recomputeFeed) = build("0", op)
+      val (fusedRows, fusedFeed, fusedScans) = build(Long.MaxValue.toString, op)
+      val (recomputeRows, recomputeFeed, recomputeScans) = build("0", op)
       assert(fusedRows == recomputeRows, s"$name: committed rows differ")
       assert(fusedFeed == recomputeFeed, s"$name: change feeds differ")
+      if (hitScale(name))
+        assert(fusedScans == recomputeScans,
+          s"$name: $recomputeScans file-scanning jobs at gate 0, $fusedScans above it")
       // the op must have actually changed something past the v0 inserts
       assert(fusedFeed.exists(r => r.contains("update_postimage") || r.contains("delete")),
         s"$name changed nothing")

@@ -27,17 +27,27 @@ trait SparkTestBase extends AnyFunSuite {
     * listeners asynchronously; a barrier job started after `f` queues
     * behind all of them, so once its event arrives the list is
     * complete. */
-  def jobsDuring[T](f: => T): (T, Seq[String]) = {
+  def jobsDuring[T](f: => T): (T, Seq[String]) =
+    jobsSeen(f)(e => Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse("")))
+
+  /** How many of the Spark jobs `f` starts scan data files (a stage of
+    * the job reads through a `FileScanRDD`); a job over materialized
+    * rows scans none. */
+  def fileScansDuring[T](f: => T): (T, Int) = {
+    val (r, scans) = jobsSeen(f)(_.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
+    (r, scans.count(identity))
+  }
+
+  private def jobsSeen[T, J](f: => T)(pick: SparkListenerJobStart => J): (T, Seq[J]) = {
     val sc = spark.sparkContext
     val key = "graft.test.jobsDuring"
     val id = java.util.UUID.randomUUID().toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[J])]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
-        seen.add(prop(key).orNull -> prop("spark.job.description")
-          .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse("")))
+        val tag = Option(e.properties).flatMap(p => Option(p.getProperty(key))).orNull
+        seen.add(tag -> Option.when(tag == id)(pick(e)))
       }
     }
     sc.addSparkListener(listener)
@@ -50,7 +60,7 @@ trait SparkTestBase extends AnyFunSuite {
       while (!seen.asScala.exists(_._1 == id + "-barrier") && System.nanoTime() < deadline)
         Thread.sleep(5)
       assert(seen.asScala.exists(_._1 == id + "-barrier"), "listener never saw the barrier job")
-      (r, seen.asScala.collect { case (`id`, d) => d }.toSeq)
+      (r, seen.asScala.collect { case (`id`, Some(j)) => j }.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
